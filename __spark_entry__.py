@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,6 +53,11 @@ from dagli_spark.functions.vector import norm
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("'", "''") + "'"
 
 
 # --------------------------------------------------------------- flagship
@@ -615,285 +621,117 @@ def q_text_ops(spark, sf_dir):
     )
 
 
-def q_phone_plan(spark, sf_dir):
-    """ContainsPhoneNumber at both leniencies (round-3 number-plan port:
-    NANP structural rules, reference default VALID bars local numbers).
-    The RE2-safe patterns replay byte-for-byte in the DuckDB oracle.
-    The corpus text contains no phone-shaped strings (all-false — the
-    negative path), so a deterministic doc_id-derived probe column cycles
-    through the three decision branches: full NANP number (valid +
-    possible), 7-digit local (possible only), currency amount (neither)."""
-    d = _t(spark, sf_dir, "documents")
+# ---- phone rows: one probe table renders both the query and its oracle
+# ContainsPhoneNumber over the region plans (functions/text
+# ._PHONE_REGION_PLANS; the reference's libphonenumber wrapper is
+# region-parameterized even though ContainsPhoneNumber.java:19 pins US).
+# The corpus text holds no phone-shaped strings, so each row checks a
+# doc_id-derived probe that cycles one branch per decision it exercises.
+# A probe part is a literal, a (start, length) slice of the 4-digit
+# doc_id % 10000 suffix, or _X37 (doc_id * 37). Branch i is taken when
+# doc_id % len(branches) == i; the last branch is the ELSE. Every check
+# replays in DuckDB with the byte-identical RE2-safe pattern.
+_FOUR = (1, 4)
+_X37 = object()
+_NO_PHONE = ["ref #", (1, 3)]
+
+
+def _phone_checks(*regions):
+    return [(f"{r.lower()}_{le}", "probe", r, le)
+            for r in regions for le in ("valid", "possible")]
+
+
+# name -> (checks: (alias, source column, region, leniency), probe branches)
+_PHONE_ROWS = {
+    # NANP structural rules at both leniencies on the text and the probe:
+    # full number (valid + possible), 7-digit local (possible only),
+    # currency amount (neither)
+    "phone_plan": (
+        [(f"{a}_{le}", c, "US", le)
+         for a, c in (("has_phone", "text"), ("probe", "probe"))
+         for le in ("valid", "possible")],
+        [["call 442-253-", _FOUR, " now"], ["local 253-", _FOUR, " line"],
+         ["cost $", _X37]]),
+    # GB/DE/FR digit groupings
+    "phone_intl": (_phone_checks("GB", "DE", "FR"), [
+        ["ring +44 20 7031 ", _FOUR, " today"],
+        ["buero (030) 12345", (1, 3)],
+        ["appelez 01 42 68 ", (1, 2), " ", (3, 2)],
+        _NO_PHONE]),
+    # the BR branch goes through the parenthesized-area form (valid ⊆
+    # possible paren alternative)
+    "phone_intl2": (_phone_checks("JP", "IN", "BR", "AU"), [
+        ["denwa +81 90-1234-", _FOUR], ["call +91 74104 1", _FOUR],
+        ["fone (11) 96123-", _FOUR], ["ring +61 2 3661 ", _FOUR],
+        _NO_PHONE]),
+    # the MX branch goes through the parenthesized-area form, the ES
+    # branch through the trunk-less 9-digit plan
+    "phone_intl3": (_phone_checks("CN", "IT", "ES", "MX"), [
+        ["dianhua +86 131 2345 ", _FOUR], ["chiama +39 02 3661 ", _FOUR],
+        ["llama +34 810 123 ", (1, 3)], ["marca (55) 1234 ", _FOUR],
+        _NO_PHONE]),
+    # the RU branch goes through trunk 8 + parenthesized area (the one
+    # plan whose trunk digit is not 0), the NL branch through the paren form
+    "phone_intl4": (_phone_checks("KR", "RU", "NL", "TR"), [
+        ["jeonhwa +82 2 312 ", _FOUR],
+        ["zvoni 8 (495) 123-", (1, 2), "-", (3, 2)],
+        ["bel (020) 624 ", _FOUR],
+        ["ara 0212 345 ", (1, 2), " ", (3, 2)],
+        _NO_PHONE]),
+}
+
+
+def _probe_col(branches):
     four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    probe = (
-        F.when(F.col("doc_id") % 3 == 0,
-               F.concat(F.lit("call 442-253-"), four, F.lit(" now")))
-        .when(F.col("doc_id") % 3 == 1,
-              F.concat(F.lit("local 253-"), four, F.lit(" line")))
-        .otherwise(F.concat(F.lit("cost $"),
-                            (F.col("doc_id") * 37).cast("string")))
-    )
-    return d.select(
-        "doc_id",
-        T.contains_phone("text").alias("has_phone_valid"),
-        T.contains_phone("text", leniency="possible")
-            .alias("has_phone_possible"),
-        T.contains_phone(probe).alias("probe_valid"),
-        T.contains_phone(probe, leniency="possible").alias("probe_possible"),
-    )
+
+    def part(p):
+        if p is _X37:
+            return (F.col("doc_id") * 37).cast("string")
+        if isinstance(p, str):
+            return F.lit(p)
+        return four if p == _FOUR else four.substr(*p)
+
+    arm = [F.concat(*map(part, b)) for b in branches]
+    m = F.col("doc_id") % len(branches)
+    col = F.when(m == 0, arm[0])
+    for i, a in enumerate(arm[1:-1], 1):
+        col = col.when(m == i, a)
+    return col.otherwise(arm[-1])
 
 
-def q_phone_intl(spark, sf_dir):
-    """ContainsPhoneNumber with non-NANP region plans (GB/DE/FR digit
-    groupings behind the same leniency API; the reference's libphonenumber
-    wrapper is region-parameterized even though ContainsPhoneNumber.java:19
-    pins US). A doc_id-derived probe cycles a valid number per region plus
-    a no-phone branch; every (region, leniency) decision replays in DuckDB
-    with the byte-identical RE2-safe pattern."""
-    d = _t(spark, sf_dir, "documents")
-    four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    probe = (
-        F.when(F.col("doc_id") % 4 == 0,
-               F.concat(F.lit("ring +44 20 7031 "), four, F.lit(" today")))
-        .when(F.col("doc_id") % 4 == 1,
-              F.concat(F.lit("buero (030) 12345"), four.substr(1, 3)))
-        .when(F.col("doc_id") % 4 == 2,
-              F.concat(F.lit("appelez 01 42 68 "),
-                       four.substr(1, 2), F.lit(" "), four.substr(3, 2)))
-        .otherwise(F.concat(F.lit("ref #"), four.substr(1, 3)))
-    )
-    cols = [F.col("doc_id")]
-    for region in ("GB", "DE", "FR"):
-        for len_ in ("valid", "possible"):
-            cols.append(
-                T.contains_phone(probe, region=region, leniency=len_)
-                .alias(f"{region.lower()}_{len_}"))
-    return d.select(*cols)
+def _probe_sql(branches):
+    four = "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
+
+    def part(p):
+        if p is _X37:
+            return "CAST(doc_id * 37 AS VARCHAR)"
+        if isinstance(p, str):
+            return _sql_str(p)
+        return four if p == _FOUR else f"substr({four}, {p[0]}, {p[1]})"
+
+    arm = [" || ".join(map(part, b)) for b in branches]
+    whens = "".join(f"WHEN doc_id % {len(arm)} = {i} THEN {a}\n"
+                    for i, a in enumerate(arm[:-1]))
+    return f"CASE {whens}ELSE {arm[-1]} END"
 
 
-def _phone_intl_oracle() -> str:
-    from dagli_spark.functions.text import phone_pattern
+def _phone_query(name, spark, sf_dir):
+    checks, branches = _PHONE_ROWS[name]
+    src = {"text": F.col("text"), "probe": _probe_col(branches)}
+    return _t(spark, sf_dir, "documents").select("doc_id", *[
+        T.contains_phone(src[c], region=r, leniency=le).alias(a)
+        for a, c, r, le in checks])
 
-    checks = ",\n                   ".join(
-        f"regexp_matches(probe, '{phone_pattern(r, le)}') "
-        f"AS {r.lower()}_{le}"
-        for r in ("GB", "DE", "FR") for le in ("valid", "possible"))
+
+def _phone_oracle(name) -> str:
+    checks, branches = _PHONE_ROWS[name]
+    cols = ",\n".join(
+        f"regexp_matches({c}, {_sql_str(T.phone_pattern(r, le))}) AS {a}"
+        for a, c, r, le in checks)
     return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   CASE
-                     WHEN doc_id % 4 = 0 THEN 'ring +44 20 7031 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                       || ' today'
-                     WHEN doc_id % 4 = 1 THEN 'buero (030) 12345' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                     WHEN doc_id % 4 = 2 THEN 'appelez 01 42 68 ' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 2) || ' ' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              3, 2)
-                     ELSE 'ref #' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                   END AS probe
-            FROM documents)
-        SELECT doc_id,
-               {checks}
-        FROM p
-    """
-
-
-def q_phone_intl3(spark, sf_dir):
-    """ContainsPhoneNumber round-5 second-session region plans
-    (CN/IT/ES/MX — four more high-traffic regions behind the same
-    leniency API; goldens in tests/test_dagli_golden.py mirror
-    libphonenumber's public example numbers). A doc_id-derived probe
-    cycles one valid number per region (the MX branch through the
-    parenthesized-area form; the ES branch through the trunk-less
-    9-digit plan) plus a no-phone branch; every (region, leniency)
-    decision replays in DuckDB with the byte-identical RE2-safe
-    pattern."""
-    d = _t(spark, sf_dir, "documents")
-    four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    probe = (
-        F.when(F.col("doc_id") % 5 == 0,
-               F.concat(F.lit("dianhua +86 131 2345 "), four))
-        .when(F.col("doc_id") % 5 == 1,
-              F.concat(F.lit("chiama +39 02 3661 "), four))
-        .when(F.col("doc_id") % 5 == 2,
-              F.concat(F.lit("llama +34 810 123 "), four.substr(1, 3)))
-        .when(F.col("doc_id") % 5 == 3,
-              F.concat(F.lit("marca (55) 1234 "), four))
-        .otherwise(F.concat(F.lit("ref #"), four.substr(1, 3)))
-    )
-    cols = [F.col("doc_id")]
-    for region in ("CN", "IT", "ES", "MX"):
-        for len_ in ("valid", "possible"):
-            cols.append(
-                T.contains_phone(probe, region=region, leniency=len_)
-                .alias(f"{region.lower()}_{len_}"))
-    return d.select(*cols)
-
-
-def _phone_intl3_oracle() -> str:
-    from dagli_spark.functions.text import phone_pattern
-
-    checks = ",\n                   ".join(
-        f"regexp_matches(probe, '{phone_pattern(r, le)}') "
-        f"AS {r.lower()}_{le}"
-        for r in ("CN", "IT", "ES", "MX") for le in ("valid", "possible"))
-    return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   CASE
-                     WHEN doc_id % 5 = 0 THEN 'dianhua +86 131 2345 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 1 THEN 'chiama +39 02 3661 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 2 THEN 'llama +34 810 123 ' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                     WHEN doc_id % 5 = 3 THEN 'marca (55) 1234 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     ELSE 'ref #' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                   END AS probe
-            FROM documents)
-        SELECT doc_id,
-               {checks}
-        FROM p
-    """
-
-
-def q_phone_intl4(spark, sf_dir):
-    """ContainsPhoneNumber round-5 third-session region plans
-    (KR/RU/NL/TR — four more high-traffic regions behind the same
-    leniency API; goldens in tests/test_dagli_golden.py pin each plan's
-    documented national formatting conventions). A doc_id-derived probe
-    cycles one valid number per region (the RU branch through trunk 8 +
-    parenthesized area — the one plan whose trunk digit is not 0; the
-    NL branch through the paren form) plus a no-phone branch; every
-    (region, leniency) decision replays in DuckDB with the
-    byte-identical RE2-safe pattern."""
-    d = _t(spark, sf_dir, "documents")
-    four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    probe = (
-        F.when(F.col("doc_id") % 5 == 0,
-               F.concat(F.lit("jeonhwa +82 2 312 "), four))
-        .when(F.col("doc_id") % 5 == 1,
-              F.concat(F.lit("zvoni 8 (495) 123-"), four.substr(1, 2),
-                       F.lit("-"), four.substr(3, 2)))
-        .when(F.col("doc_id") % 5 == 2,
-              F.concat(F.lit("bel (020) 624 "), four))
-        .when(F.col("doc_id") % 5 == 3,
-              F.concat(F.lit("ara 0212 345 "), four.substr(1, 2),
-                       F.lit(" "), four.substr(3, 2)))
-        .otherwise(F.concat(F.lit("ref #"), four.substr(1, 3)))
-    )
-    cols = [F.col("doc_id")]
-    for region in ("KR", "RU", "NL", "TR"):
-        for len_ in ("valid", "possible"):
-            cols.append(
-                T.contains_phone(probe, region=region, leniency=len_)
-                .alias(f"{region.lower()}_{len_}"))
-    return d.select(*cols)
-
-
-def _phone_intl4_oracle() -> str:
-    from dagli_spark.functions.text import phone_pattern
-
-    checks = ",\n                   ".join(
-        f"regexp_matches(probe, '{phone_pattern(r, le)}') "
-        f"AS {r.lower()}_{le}"
-        for r in ("KR", "RU", "NL", "TR") for le in ("valid", "possible"))
-    return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   CASE
-                     WHEN doc_id % 5 = 0 THEN 'jeonhwa +82 2 312 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 1 THEN 'zvoni 8 (495) 123-' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 2) || '-' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              3, 2)
-                     WHEN doc_id % 5 = 2 THEN 'bel (020) 624 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 3 THEN 'ara 0212 345 ' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 2) || ' ' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              3, 2)
-                     ELSE 'ref #' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                   END AS probe
-            FROM documents)
-        SELECT doc_id,
-               {checks}
-        FROM p
-    """
-
-
-def q_phone_intl2(spark, sf_dir):
-    """ContainsPhoneNumber round-5 region plans (JP/IN/BR/AU — the next
-    four high-traffic regions behind the same leniency API; goldens in
-    tests/test_dagli_golden.py mirror libphonenumber's public example
-    numbers). A doc_id-derived probe cycles one valid number per region
-    (the BR branch through the parenthesized-area form, exercising the
-    valid⊆possible paren alternative) plus a no-phone branch; every
-    (region, leniency) decision replays in DuckDB with the byte-identical
-    RE2-safe pattern."""
-    d = _t(spark, sf_dir, "documents")
-    four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    probe = (
-        F.when(F.col("doc_id") % 5 == 0,
-               F.concat(F.lit("denwa +81 90-1234-"), four))
-        .when(F.col("doc_id") % 5 == 1,
-              F.concat(F.lit("call +91 74104 1"), four))
-        .when(F.col("doc_id") % 5 == 2,
-              F.concat(F.lit("fone (11) 96123-"), four))
-        .when(F.col("doc_id") % 5 == 3,
-              F.concat(F.lit("ring +61 2 3661 "), four))
-        .otherwise(F.concat(F.lit("ref #"), four.substr(1, 3)))
-    )
-    cols = [F.col("doc_id")]
-    for region in ("JP", "IN", "BR", "AU"):
-        for len_ in ("valid", "possible"):
-            cols.append(
-                T.contains_phone(probe, region=region, leniency=len_)
-                .alias(f"{region.lower()}_{len_}"))
-    return d.select(*cols)
-
-
-def _phone_intl2_oracle() -> str:
-    from dagli_spark.functions.text import phone_pattern
-
-    checks = ",\n                   ".join(
-        f"regexp_matches(probe, '{phone_pattern(r, le)}') "
-        f"AS {r.lower()}_{le}"
-        for r in ("JP", "IN", "BR", "AU") for le in ("valid", "possible"))
-    return f"""
-        WITH p AS (
-            SELECT doc_id,
-                   CASE
-                     WHEN doc_id % 5 = 0 THEN 'denwa +81 90-1234-' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 1 THEN 'call +91 74104 1' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 2 THEN 'fone (11) 96123-' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     WHEN doc_id % 5 = 3 THEN 'ring +61 2 3661 ' ||
-                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                     ELSE 'ref #' ||
-                       substr(lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                              1, 3)
-                   END AS probe
-            FROM documents)
-        SELECT doc_id,
-               {checks}
+        WITH p AS (SELECT doc_id, text, {_probe_sql(branches)} AS probe
+                   FROM documents)
+        SELECT doc_id, {cols}
         FROM p
     """
 
@@ -1232,73 +1070,48 @@ def q_tokens_locale(spark, sf_dir):
         F.posexplode(T.tokens_locale("text", "en")).alias("pos", "token"))
 
 
-def q_tokens_ascii(spark, sf_dir):
-    """The rule-engine tokenizer under its GENERIC locale (the reference's
-    JFlexTokenizer default-lexer path, JFlexTokenizer.java:30-37) over
-    printable-ASCII documents: the shared JFlex macro rules contain no
-    lookahead, so the SAME alternation replays verbatim in DuckDB RE2 —
-    the driver-checkable face of the tokens_locale family (the EN/DE
-    clitic rules need lookahead and stay Python-oracle-pinned)."""
-    # engine-neutral ASCII filter: an UNANCHORED negative class ("contains
-    # any non-printable-ASCII char") means the same thing in java.util.regex
-    # and RE2 — '$' does not (Java matches before a final \n, RE2 does not),
-    # so an anchored '^[ -~]*$' would diverge on text ending in a newline
-    d = _t(spark, sf_dir, "documents").where(~F.col("text").rlike("[^ -~]"))
-    return d.select(
-        "doc_id",
-        F.posexplode(T.tokens_locale("text", "xx")).alias("pos", "token"))
+# ---- core-tokenizer rows: the rule-engine tokenizer on the document
+# subsets where its lookahead rules cannot fire, so the output replays
+# verbatim in DuckDB RE2 as a lookahead-free alternation; the full
+# clitic/abbrev behavior stays pinned by tests/test_tokens_locale.py.
+# Each exclude regex means the same thing in java.util.regex and RE2.
+# name -> (engine locale, oracle pattern source, exclude regexes)
+_CORE_TOKENIZER_ROWS = {
+    # GENERIC locale (the reference's JFlexTokenizer default-lexer path,
+    # JFlexTokenizer.java:30-37): the shared macro rules hold no lookahead.
+    # The ASCII filter is an UNANCHORED negative class: '^[ -~]*$' would
+    # diverge on text ending in a newline (Java '$' matches before it)
+    "tokens_ascii": ("xx", T.locale_pattern_source("xx"), ("[^ -~]",)),
+    # ENGLISH locale (JFlexEnglishLexer): no apostrophe/backtick and no
+    # abbrev-word+period, where EN equals the EN-core alternation
+    # (fuzz-pinned equivalent)
+    "tokens_en_core": ("en", T.locale_pattern_source_en_core(),
+                       T.EN_CORE_EXCLUDE_RES),
+    # GERMAN locale (JFlexGermanLexer): no apostrophe and no
+    # GermanAbbrev+period, where DE equals the GENERIC alternation
+    "tokens_de_core": ("de", T.locale_pattern_source("xx"),
+                       T.DE_CORE_EXCLUDE_RES),
+}
 
 
-def _tokens_ascii_oracle() -> str:
-    from dagli_spark.functions.text import locale_pattern_source
-
-    pat = locale_pattern_source("xx").replace("'", "''")
-    return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_extract_all(text, '{pat}', 0, 'i') AS toks
-                   FROM documents
-                   WHERE NOT regexp_matches(text, '[^ -~]'))
-        SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos,
-               unnest(toks) AS token
-        FROM t
-    """
-
-
-def q_tokens_en_core(spark, sf_dir):
-    """The ENGLISH locale tokenizer (the reference's JFlexEnglishLexer
-    path, contraction/abbrev rules loaded) over the document subset where
-    its lookahead-dependent rules cannot fire: printable ASCII, no
-    apostrophe/backtick, no abbrev-word+period substring
-    (text.EN_CORE_EXCLUDE_RES — each filter regex means the same thing in
-    java.util.regex and RE2). On that subset the EN output replays
-    verbatim in DuckDB as the lookahead-free EN-core alternation
-    (text.locale_pattern_source_en_core — fuzz-pinned equivalent), moving
-    the EN path from Python-oracle-only into driver-oracle territory;
-    the full clitic/abbrev behavior stays pinned by
-    tests/test_tokens_locale.py."""
-    from dagli_spark.functions.text import EN_CORE_EXCLUDE_RES
-
+def _core_tokens_query(name, spark, sf_dir):
+    locale, _, excludes = _CORE_TOKENIZER_ROWS[name]
     d = _t(spark, sf_dir, "documents")
-    for r in EN_CORE_EXCLUDE_RES:
+    for r in excludes:
         d = d.where(~F.col("text").rlike(r))
     return d.select(
         "doc_id",
-        F.posexplode(T.tokens_locale("text", "en")).alias("pos", "token"))
+        F.posexplode(T.tokens_locale("text", locale)).alias("pos", "token"))
 
 
-def _tokens_en_core_oracle() -> str:
-    from dagli_spark.functions.text import (
-        EN_CORE_EXCLUDE_RES,
-        locale_pattern_source_en_core,
-    )
-
-    pat = locale_pattern_source_en_core().replace("'", "''")
-    conds = " AND ".join(
-        f"NOT regexp_matches(text, '{r.replace(chr(39), chr(39) * 2)}')"
-        for r in EN_CORE_EXCLUDE_RES)
+def _core_tokens_oracle(name) -> str:
+    _, pattern, excludes = _CORE_TOKENIZER_ROWS[name]
+    conds = " AND ".join(f"NOT regexp_matches(text, {_sql_str(r)})"
+                         for r in excludes)
     return f"""
         WITH t AS (SELECT doc_id,
-                          regexp_extract_all(text, '{pat}', 0, 'i') AS toks
+                          regexp_extract_all(text, {_sql_str(pattern)}, 0, 'i')
+                            AS toks
                    FROM documents
                    WHERE {conds})
         SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos,
@@ -1307,44 +1120,44 @@ def _tokens_en_core_oracle() -> str:
     """
 
 
-def q_tokens_de_core(spark, sf_dir):
-    """The GERMAN locale tokenizer (the reference's JFlexGermanLexer
-    path, GermanAbbrev + genitive clitic loaded) over the document subset
-    where BOTH its lookahead rules cannot fire (no apostrophe, no
-    GermanAbbrev+period substring — text.DE_CORE_EXCLUDE_RES): there the
-    DE output equals the lookahead-free GENERIC alternation verbatim
-    (fuzz-pinned in tests/test_tokens_locale.py), so the DE path joins EN
-    (tokens_en_core) and the generic lexer (tokens_ascii) in driver-
-    oracle territory; the full clitic/abbrev behavior stays pinned by
-    the Python-oracle goldens."""
-    from dagli_spark.functions.text import DE_CORE_EXCLUDE_RES
+def _audio_rows(spark, sf_dir, probe) -> DataFrame:
+    """The audio rows' shared projection: the ``probe`` UDF's payload per
+    doc_id decoded through with_audio_features, floats rounded to 9
+    places (the oracle rounds the same)."""
+    from dagli_spark.features.multimodal import with_audio_features
 
-    d = _t(spark, sf_dir, "documents")
-    for r in DE_CORE_EXCLUDE_RES:
-        d = d.where(~F.col("text").rlike(r))
-    return d.select(
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    out = with_audio_features(d.withColumn("audio_bytes", probe("doc_id")))
+    return out.select(
         "doc_id",
-        F.posexplode(T.tokens_locale("text", "de")).alias("pos", "token"))
-
-
-def _tokens_de_core_oracle() -> str:
-    from dagli_spark.functions.text import (
-        DE_CORE_EXCLUDE_RES,
-        locale_pattern_source,
+        F.round("au_duration_s", 9).alias("au_duration_s"),
+        "au_sample_rate",
+        F.round("au_rms", 9).alias("au_rms"),
+        F.round("au_zero_cross_rate", 9).alias("au_zero_cross_rate"),
+        F.round("au_peak", 9).alias("au_peak"),
     )
 
-    pat = locale_pattern_source("xx").replace("'", "''")
-    conds = " AND ".join(
-        f"NOT regexp_matches(text, '{r.replace(chr(39), chr(39) * 2)}')"
-        for r in DE_CORE_EXCLUDE_RES)
+
+def _audio_oracle(ctes: str, corrupt: str, amp: str) -> str:
+    """The audio rows' shared analytic oracle over the CTE ``a`` (doc_id,
+    ``n`` samples at 8 kHz, constant amplitude ``amp``): rms and peak are
+    exactly amp/32768, zero-crossing rate exactly 0, and the ``corrupt``
+    branch is NULL in every column."""
+    feats = {
+        "au_duration_s": "round(n / CAST(8000 AS DOUBLE), 9)",
+        "au_sample_rate": "CAST(8000 AS INTEGER)",
+        "au_rms": f"round({amp} / CAST(32768 AS DOUBLE), 9)",
+        "au_zero_cross_rate": "CAST(0.0 AS DOUBLE)",
+        "au_peak": f"round({amp} / CAST(32768 AS DOUBLE), 9)",
+    }
+    cols = ",\n               ".join(
+        f"CASE WHEN {corrupt} THEN NULL ELSE {e} END AS {a}"
+        for a, e in feats.items())
     return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_extract_all(text, '{pat}', 0, 'i') AS toks
-                   FROM documents
-                   WHERE {conds})
-        SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos,
-               unnest(toks) AS token
-        FROM t
+        WITH {ctes}
+        SELECT doc_id,
+               {cols}
+        FROM a
     """
 
 
@@ -1359,10 +1172,7 @@ def q_audio_features(spark, sf_dir):
     sum/mean/sqrt), duration is one IEEE division both engines round
     identically, zero-crossing rate is exactly 0. Corrupt rows must
     degrade to nulls, never fail the stage."""
-    from dagli_spark.features.multimodal import (
-        encode_fake_audio,
-        with_audio_features,
-    )
+    from dagli_spark.features.multimodal import encode_fake_audio
 
     @F.pandas_udf("binary")
     def wav_probe(doc_id: pd.Series) -> pd.Series:
@@ -1392,40 +1202,18 @@ def q_audio_features(spark, sf_dir):
             out.append(b[:37] if m7 == 3 else b)
         return pd.Series(out)
 
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    out = with_audio_features(d.withColumn("audio_bytes",
-                                           wav_probe("doc_id")))
-    return out.select(
-        "doc_id",
-        F.round("au_duration_s", 9).alias("au_duration_s"),
-        "au_sample_rate",
-        F.round("au_rms", 9).alias("au_rms"),
-        F.round("au_zero_cross_rate", 9).alias("au_zero_cross_rate"),
-        F.round("au_peak", 9).alias("au_peak"),
-    )
+    return _audio_rows(spark, sf_dir, wav_probe)
 
 
 def _audio_features_oracle() -> str:
-    # analytic expectations; m7=3 is the truncated-WAV corrupt branch
-    return """
-        WITH p AS (SELECT doc_id,
+    # m7=3 is the truncated-WAV corrupt branch
+    return _audio_oracle(
+        """a AS (SELECT doc_id,
                           1024 + 32 * (doc_id % 8) AS n,
                           256 * (1 + doc_id % 64) AS c,
                           doc_id % 7 AS m7
-                   FROM documents)
-        SELECT doc_id,
-               CASE WHEN m7 = 3 THEN NULL
-                    ELSE round(n / CAST(8000 AS DOUBLE), 9) END AS au_duration_s,
-               CASE WHEN m7 = 3 THEN NULL
-                    ELSE CAST(8000 AS INTEGER) END AS au_sample_rate,
-               CASE WHEN m7 = 3 THEN NULL
-                    ELSE round(c / CAST(32768 AS DOUBLE), 9) END AS au_rms,
-               CASE WHEN m7 = 3 THEN NULL
-                    ELSE CAST(0.0 AS DOUBLE) END AS au_zero_cross_rate,
-               CASE WHEN m7 = 3 THEN NULL
-                    ELSE round(c / CAST(32768 AS DOUBLE), 9) END AS au_peak
-        FROM p
-    """
+                   FROM documents)""",
+        "m7 = 3", "c")
 
 
 def q_audio_g711(spark, sf_dir):
@@ -1439,7 +1227,6 @@ def q_audio_g711(spark, sf_dir):
     fitted-literal oracles: deterministic spec-derived state, pinned at
     build time) — a constant decoded signal's rms and peak are exactly
     |c'|/32768 (dyadic, bit-exact through numpy), zcr exactly 0."""
-    from dagli_spark.features.multimodal import with_audio_features
 
     @F.pandas_udf("binary")
     def g711_probe(doc_id: pd.Series) -> pd.Series:
@@ -1472,17 +1259,7 @@ def q_audio_g711(spark, sf_dir):
             out.append(b[:37] if m5 == 3 else b)
         return pd.Series(out)
 
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    out = with_audio_features(d.withColumn("audio_bytes",
-                                           g711_probe("doc_id")))
-    return out.select(
-        "doc_id",
-        F.round("au_duration_s", 9).alias("au_duration_s"),
-        "au_sample_rate",
-        F.round("au_rms", 9).alias("au_rms"),
-        F.round("au_zero_cross_rate", 9).alias("au_zero_cross_rate"),
-        F.round("au_peak", 9).alias("au_peak"),
-    )
+    return _audio_rows(spark, sf_dir, g711_probe)
 
 
 def _audio_g711_oracle() -> str:
@@ -1506,27 +1283,16 @@ def _audio_g711_oracle() -> str:
     vals = ", ".join(
         f"({r}, {rt(256 * (1 + r), 'u')}, {rt(256 * (1 + r), 'a')})"
         for r in range(64))
-    return f"""
-        WITH p AS (SELECT doc_id,
+    # m5=3 is the truncated corrupt branch, m5=2 the A-law one
+    return _audio_oracle(
+        f"""p AS (SELECT doc_id,
                           800 + 16 * (doc_id % 8) AS n,
                           doc_id % 64 AS r,
                           doc_id % 5 AS m5
                    FROM documents),
-             j AS (SELECT p.*, CASE WHEN m5 = 2 THEN ca ELSE cu END AS cp
-                   FROM p JOIN (VALUES {vals}) m(r, cu, ca) ON p.r = m.r)
-        SELECT doc_id,
-               CASE WHEN m5 = 3 THEN NULL
-                    ELSE round(n / CAST(8000 AS DOUBLE), 9) END AS au_duration_s,
-               CASE WHEN m5 = 3 THEN NULL
-                    ELSE CAST(8000 AS INTEGER) END AS au_sample_rate,
-               CASE WHEN m5 = 3 THEN NULL
-                    ELSE round(cp / CAST(32768 AS DOUBLE), 9) END AS au_rms,
-               CASE WHEN m5 = 3 THEN NULL
-                    ELSE CAST(0.0 AS DOUBLE) END AS au_zero_cross_rate,
-               CASE WHEN m5 = 3 THEN NULL
-                    ELSE round(cp / CAST(32768 AS DOUBLE), 9) END AS au_peak
-        FROM j
-    """
+             a AS (SELECT p.*, CASE WHEN m5 = 2 THEN ca ELSE cu END AS cp
+                   FROM p JOIN (VALUES {vals}) m(r, cu, ca) ON p.r = m.r)""",
+        "m5 = 3", "cp")
 
 
 def q_video_features(spark, sf_dir):
@@ -1657,17 +1423,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- (a) flagships + touched this round ---------------------------
         "northrule_features": q_northrule,
         "northrule_temporal": q_northrule_temporal,
-        "phone_intl2": q_phone_intl2,
-        "phone_intl3": q_phone_intl3,
-        "phone_intl4": q_phone_intl4,
-        "tokens_en_core": q_tokens_en_core,
+        "phone_intl2": partial(_phone_query, "phone_intl2"),
+        "phone_intl3": partial(_phone_query, "phone_intl3"),
+        "phone_intl4": partial(_phone_query, "phone_intl4"),
+        "tokens_en_core": partial(_core_tokens_query, "tokens_en_core"),
         "audio_features": q_audio_features,
         "audio_g711": q_audio_g711,
         "video_features": q_video_features,
-        "tokens_ascii": q_tokens_ascii,
-        "tokens_de_core": q_tokens_de_core,
-        "phone_intl": q_phone_intl,
-        "phone_plan": q_phone_plan,
+        "tokens_ascii": partial(_core_tokens_query, "tokens_ascii"),
+        "tokens_de_core": partial(_core_tokens_query, "tokens_de_core"),
+        "phone_intl": partial(_phone_query, "phone_intl"),
+        "phone_plan": partial(_phone_query, "phone_plan"),
         "top_by_value": q_top_by_value,
         "top_by_pmi": q_top_by_pmi,
         "densify": q_densify,
@@ -1945,7 +1711,10 @@ def _embedding_dedup_oracle() -> str:
     the pure splitmix generator (similarity._hyperplanes), so bucketing,
     candidate join and the exact-cosine threshold verify replay in SQL
     with the plane vectors inlined (q_embedding_dedup params: dim=64,
-    num_planes=8, num_tables=4, seed=17, threshold=0.35)."""
+    num_planes=8, num_tables=4, seed=17, threshold=0.35). Both decisions
+    sit clear of float noise at sf0.01: the nearest candidate cosine is
+    7e-5 off the cut, and the smallest |embedding . plane| behind a
+    bucket-sign bit is 4.77e-5 (pinned by tests/test_oracle_margins.py)."""
     from dagli_spark.operators.similarity import _hyperplanes
 
     num_planes, num_tables, seed = 8, 4, 17
@@ -2556,30 +2325,7 @@ def oracle_sql() -> dict[str, str]:
         # same RE2-safe pattern strings the engine compiles (single source
         # of truth: functions/text.PHONE_*_RE — no lookarounds, so Java
         # regex and RE2 agree)
-        "phone_plan": f"""
-            WITH p AS (
-                SELECT doc_id, text,
-                       CASE
-                         WHEN doc_id % 3 = 0 THEN 'call 442-253-' ||
-                           lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                           || ' now'
-                         WHEN doc_id % 3 = 1 THEN 'local 253-' ||
-                           lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                           || ' line'
-                         ELSE 'cost $' || CAST(doc_id * 37 AS VARCHAR)
-                       END AS probe
-                FROM documents)
-            SELECT doc_id,
-                   regexp_matches(text, '{T.PHONE_VALID_RE}')
-                     AS has_phone_valid,
-                   regexp_matches(text, '{T.PHONE_POSSIBLE_RE}')
-                     AS has_phone_possible,
-                   regexp_matches(probe, '{T.PHONE_VALID_RE}')
-                     AS probe_valid,
-                   regexp_matches(probe, '{T.PHONE_POSSIBLE_RE}')
-                     AS probe_possible
-            FROM p
-        """,
+        "phone_plan": _phone_oracle("phone_plan"),
         "densify": """
             WITH s AS (SELECT event_id, event_id % 97 AS idx, value AS val
                        FROM events),
@@ -2825,16 +2571,16 @@ def oracle_sql() -> dict[str, str]:
         "jaccard_dedup": _jaccard_dedup_oracle(),
         "embedding_dedup": _embedding_dedup_oracle(),
         "northrule_features": _northrule_features_oracle(),
-        "tokens_ascii": _tokens_ascii_oracle(),
-        "tokens_en_core": _tokens_en_core_oracle(),
+        "tokens_ascii": _core_tokens_oracle("tokens_ascii"),
+        "tokens_en_core": _core_tokens_oracle("tokens_en_core"),
         "audio_features": _audio_features_oracle(),
         "audio_g711": _audio_g711_oracle(),
         "video_features": _video_features_oracle(),
-        "tokens_de_core": _tokens_de_core_oracle(),
-        "phone_intl": _phone_intl_oracle(),
-        "phone_intl2": _phone_intl2_oracle(),
-        "phone_intl3": _phone_intl3_oracle(),
-        "phone_intl4": _phone_intl4_oracle(),
+        "tokens_de_core": _core_tokens_oracle("tokens_de_core"),
+        "phone_intl": _phone_oracle("phone_intl"),
+        "phone_intl2": _phone_oracle("phone_intl2"),
+        "phone_intl3": _phone_oracle("phone_intl3"),
+        "phone_intl4": _phone_oracle("phone_intl4"),
         # minhash_pairs / simhash_pairs: xxhash64-family
         # dependent (documented different hash family than the reference's
         # MurmurHash3) — rows-only; tokens_locale: rule regex needs

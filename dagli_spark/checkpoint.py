@@ -128,8 +128,21 @@ def checkpointed_northrule(
     """The north-rule pipeline cut into resumable stages:
     (1) event_features (the expensive decode+window pass) and
     (2) the as-of join + assembly. Killing the job between stages and
-    re-running resumes from the stage-1 parquet."""
+    re-running resumes from the stage-1 parquet. ``opts`` are
+    :func:`~dagli_spark.northrule.build_features`'s options, each passed
+    to the stage it configures; an unknown one raises TypeError."""
+    import inspect
+
     from dagli_spark.northrule import asof_features, assemble_vector, event_features
+
+    def kwonly(fn):
+        return {n for n, p in inspect.signature(fn).parameters.items()
+                if p.kind is p.KEYWORD_ONLY}
+
+    ev_opts, asof_opts = kwonly(event_features), kwonly(asof_features)
+    unknown = sorted(set(opts) - ev_opts - asof_opts)
+    if unknown:
+        raise TypeError(f"checkpointed_northrule got unknown options {unknown}")
 
     ck = Checkpointer(ckpt_root)
     k1 = content_key("event_features", seed_key, paths["images"],
@@ -142,7 +155,7 @@ def checkpointed_northrule(
         return event_features(
             spark.read.parquet(paths["image_events"]),
             spark.read.parquet(paths["images"]),
-            with_pixels=opts.get("with_pixels", True),
+            **{k: v for k, v in opts.items() if k in ev_opts},
         )
 
     feats = ck.stage(spark, "event_features", k1, build_feats)
@@ -153,9 +166,7 @@ def checkpointed_northrule(
     def build_out():
         out = asof_features(
             spark.read.parquet(paths["queries"]), feats,
-            strict=opts.get("strict", False),
-            time_buckets=opts.get("time_buckets", 0),
-            bucket_width=opts.get("bucket_width"),
+            **{k: v for k, v in opts.items() if k in asof_opts},
         )
         return assemble_vector(out)
 

@@ -349,8 +349,8 @@ def contains_phone(col, *, region: str = "US",
                    leniency: str = "valid") -> Column:
     """text-phone/.../ContainsPhoneNumber.java — number-plan heuristic
     (see PHONE_*_RE / _PHONE_REGION_PLANS above). The reference hardcodes
-    region US; ``region`` extends the same structural port to
-    GB/DE/FR/JP/IN/BR/AU.
+    region US; ``region`` extends the same structural port to every plan
+    in :data:`_PHONE_REGION_PLANS`.
     ``leniency`` mirrors the reference's Leniency enum subset: 'valid'
     (default — structural plan validity, bars local numbers) or
     'possible' (length-only; local numbers match). Swap in a

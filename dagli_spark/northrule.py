@@ -12,8 +12,9 @@ Dataflow (each step one declarative DataFrame stage; Catalyst fuses):
    One window spec -> one sort serves all (SURVEY.md §2.6).
 3. As-of join of the query table onto the featured events (union + LOCF
    sort-merge; optional time-bucketed path for hot entities).
-4. Decode-stage features for the matched image only (Arrow UDF): pixel
-   stats + phash recheck — bounded by |queries|, never |events|.
+4. Decode-stage pixel stats (Arrow UDF) ride along from step 1: each
+   DISTINCT image referenced by events is decoded once and its stats
+   carried through the as-of join (``with_pixels=False`` skips them).
 5. Assemble ``feature_vector`` (array<double>) + the 64-dim phash
    embedding; keep ``__asof_matched_time`` for the leakage audit.
 
@@ -406,31 +407,12 @@ def asof_features(
     )
 
 
-def attach_pixel_features(asof_out: DataFrame, images: DataFrame) -> DataFrame:
-    """Step 4: decode only matched images — each DISTINCT image exactly once
-    (many queries share a matched image; decoding per query row would
-    multiply the Python-side work). The decoded-stats frame is
-    dictionary-sized, so it broadcast-joins back onto the query rows: the
-    fat ``bytes`` column enters the plan only inside the decode stage and
-    never crosses a shuffle attached to the fact table."""
-    matched = asof_out.withColumnRenamed("ev_image_id", "image_id")
-    needed = matched.select("image_id").where(F.col("image_id").isNotNull()).distinct()
-    # broadcast the id set explicitly (like image_stats): `needed` comes
-    # from a complex subtree Catalyst cannot size, and a sort-merge plan
-    # here would shuffle the fat bytes column
-    to_decode = F.broadcast(needed).join(
-        images.select("image_id", "bytes", "phash"), "image_id")
-    stats = with_decode_features(to_decode, "bytes").drop("bytes")
-    return matched.join(F.broadcast(stats), "image_id", "left")
-
-
 def assemble_vector(df: DataFrame) -> DataFrame:
+    """Step 5 over :func:`asof_features` output: ``feature_vector`` (a
+    feature absent from the frame — px_* without pixels — is NaN) and the
+    64-dim phash embedding."""
     def pick(n):
-        if f"ev_{n}" in df.columns:
-            return F.col(f"ev_{n}")
-        if n in df.columns:
-            return F.col(n)
-        return F.lit(None)
+        return F.col(f"ev_{n}") if f"ev_{n}" in df.columns else F.lit(None)
 
     named = {
         "label_locf": pick("label"),
@@ -441,60 +423,29 @@ def assemble_vector(df: DataFrame) -> DataFrame:
         F.coalesce(named.get(n, pick(n)), F.lit(float("nan"))).cast("double")
         for n in FEATURE_NAMES
     ])
-    ph = "ev_phash" if "ev_phash" in df.columns else "phash"
-    out = df.withColumn("feature_vector", vec)
-    if ph in df.columns:
-        out = out.withColumn(
-            "phash_embedding",
-            F.when(F.col(ph).isNotNull(), phash_embedding_col(ph)),
-        )
-    else:
-        out = out.withColumn("phash_embedding", F.lit(None).cast("array<float>"))
-    return out
+    return df.withColumn("feature_vector", vec).withColumn(
+        "phash_embedding",
+        F.when(F.col("ev_phash").isNotNull(), phash_embedding_col("ev_phash")),
+    )
 
 
 def build_features(
     queries: DataFrame, events: DataFrame, images: DataFrame, *,
     strict: bool = False, time_buckets: int = 0, bucket_width=None,
-    with_pixels: bool = True, decode_scope: str = "events",
+    with_pixels: bool = True,
     hot_min_rows: int | None = 500_000, hot_target_rows: int = 65_536,
     hot_rows: list | None = None,
 ) -> DataFrame:
     """Full pipeline; returns one row per query row with feature_vector,
-    phash_embedding, and the leakage-audit matched-time column.
-
-    decode_scope:
-      - ``"events"`` (default): decode every distinct image referenced by
-        events ONCE and carry the stats through the single forward pass —
-        no persist, no second as-of computation; the scalable shape when
-        query coverage is dense.
-      - ``"matched"``: decode only images actually matched by a query —
-        cheaper when queries are sparse relative to events; costs one
-        persist of the as-of output (two consumers).
-    """
-    skew = {"hot_min_rows": hot_min_rows, "hot_target_rows": hot_target_rows,
-            "hot_rows": hot_rows}
-    if with_pixels and decode_scope == "events":
-        feats = event_features(events, images, with_pixels=True, **skew)
-        out = asof_features(queries, feats, strict=strict,
-                            time_buckets=time_buckets, bucket_width=bucket_width)
-        return assemble_vector(out)
-
-    feats = event_features(events, images, with_pixels=False, **skew)
+    phash_embedding, and the leakage-audit matched-time column. One
+    forward pass: every distinct image referenced by events is decoded
+    once (``with_pixels``) and its stats carried through the as-of join;
+    without pixels the px_* slots of feature_vector are NaN."""
+    feats = event_features(events, images, with_pixels=with_pixels,
+                           hot_min_rows=hot_min_rows,
+                           hot_target_rows=hot_target_rows, hot_rows=hot_rows)
     out = asof_features(queries, feats, strict=strict,
                         time_buckets=time_buckets, bucket_width=bucket_width)
-    if with_pixels:
-        # the as-of output feeds two consumers (distinct-image id set and
-        # the final stats join) — persist so the union+LOCF sort runs once.
-        # The cache lives until session end / storage eviction; a long-lived
-        # service calling this repeatedly should spark.catalog.clearCache()
-        # between jobs (bench.py does).
-        out = out.persist()
-        out = attach_pixel_features(out, images)
-    else:
-        out = out.withColumn("phash", F.lit(None).cast("long"))
-        for c in PX_COLS:
-            out = out.withColumn(c, F.lit(None).cast("double"))
     return assemble_vector(out)
 
 

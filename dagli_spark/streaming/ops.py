@@ -133,13 +133,16 @@ def _locf_fn(
     else:
         last_time, last_label = None, None
 
-    obs_all = pdf["label"].notna()
+    # float64 up front: an all-null batch arrives as object dtype, whose
+    # ffill relies on pandas' deprecated silent downcast
+    label = pdf["label"].astype("float64")
+    obs_all = label.notna()
     obs = obs_all
     if last_time is not None:
         # observations older than the carried state never advance non-late
         # rows (the state is newer) nor the state itself
         obs = obs_all & (pdf["event_time"] >= last_time)
-    locf = pdf["label"].where(obs).ffill()
+    locf = label.where(obs).ffill()
     if last_label is not None:
         locf = locf.fillna(last_label)
     if last_time is not None:
@@ -147,7 +150,7 @@ def _locf_fn(
         if late.any():
             # leak-free value for late rows: in-batch LOCF over ALL
             # observations (each row sees only obs <= its own time)
-            locf = locf.where(~late, pdf["label"].where(obs_all).ffill())
+            locf = locf.where(~late, label.where(obs_all).ffill())
     out = pd.DataFrame({
         "entity_id": key[0],
         "event_time": pdf["event_time"].values,
@@ -156,7 +159,7 @@ def _locf_fn(
     })
     if obs.any():
         newest = pdf.index[obs.values][-1]  # last in stable time order
-        cand_t, cand_l = pdf["event_time"][newest], float(pdf["label"][newest])
+        cand_t, cand_l = pdf["event_time"][newest], float(label[newest])
         if last_time is None or cand_t >= last_time:
             last_time, last_label = cand_t, cand_l
     state.update((last_time, last_label))

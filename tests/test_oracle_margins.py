@@ -12,7 +12,8 @@ decisions are stable at the oracle scale (sf0.01): every argmin margin,
 probe-routing boundary, top-k adjacent-cosine gap and round(...,4) edge
 distance must exceed thresholds that sit ~6+ orders of magnitude above
 summation noise (measured minima at generation time: assign 4.8e-4,
-routing 7.0e-4, adjacent cosine 2.0e-3, rounding edge 3.1e-6). If a data
+routing 7.0e-4, adjacent cosine 2.0e-3, rounding edge 3.1e-6, LSH bucket
+sign 4.8e-5). If a data
 or centroid regeneration ever erodes a margin, this fails loudly and the
 affected query must be made tie-tolerant before shipping.
 
@@ -97,3 +98,17 @@ def test_nearest_centroid_margins(emb):
         C[i, i] = 1.0
     S = np.sort(_sq_dists(X, C), axis=1)
     assert float((S[:, 1] - S[:, 0]).min()) > DIST_MARGIN
+
+
+def test_embedding_dedup_bucket_sign_margins(emb):
+    """q_embedding_dedup (dim=64, num_planes=8, num_tables=4, seed=17):
+    every bucket bit is the sign of embedding . plane, summed in index
+    order by the engine's aggregate and by the oracle's list_sum, so no
+    dot product may sit within float noise of 0 (measured minimum at
+    sf0.01: 4.77e-5)."""
+    from dagli_spark.operators.similarity import _hyperplanes
+
+    _, X = emb
+    dots = np.stack([X @ _hyperplanes(64, 8, 17 + 101 * t).T
+                     for t in range(4)])
+    assert float(np.abs(dots).min()) >= DIST_MARGIN

@@ -133,6 +133,40 @@ def test_checkpoint_resume(spark, tmp_path):
     assert r1 == rd
 
 
+def test_checkpointed_northrule_rejects_unknown_option(spark, tmp_path):
+    import pytest
+
+    paths = materialize(spark, "smoke")
+    with pytest.raises(TypeError, match="with_pixel"):
+        checkpointed_northrule(spark, paths, str(tmp_path / "ckpt"),
+                               with_pixel=False)
+
+
+def test_checkpointed_northrule_passes_every_option(spark, tmp_path,
+                                                   monkeypatch):
+    """The skew options reach event_features: with the hot path forced
+    (the smoke-scale values of test_hot_entity_bucketed_windows_match_plain)
+    the checkpointed output equals the direct pipeline's, columns and rows."""
+    import dagli_spark.northrule as nr
+
+    thresholds = []
+    detect = nr.detect_hot_entities
+
+    def spy(events, min_rows, **kw):
+        thresholds.append(min_rows)
+        return detect(events, min_rows, **kw)
+
+    monkeypatch.setattr(nr, "detect_hot_entities", spy)
+    paths = materialize(spark, "smoke")
+    opts = {"with_pixels": False, "hot_min_rows": 100, "hot_target_rows": 20}
+    got = checkpointed_northrule(spark, paths, str(tmp_path / "ckpt"), **opts)
+    want = northrule_run(spark, paths, **opts)
+    assert thresholds == [100, 100]
+    assert got.columns == want.columns
+    assert (sorted(str(r) for r in got.collect())
+            == sorted(str(r) for r in want.collect()))
+
+
 def test_content_key_stability():
     assert content_key("a", 1, [2, 3]) == content_key("a", 1, [2, 3])
     assert content_key("a", 1) != content_key("a", 2)
