@@ -8,7 +8,7 @@ Prints ONE JSON line:
 
 Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] cores (default 32)
+  SPARK_GRAFT_CPUS    local[N] cores (default: the CPUs this process may use)
   BENCH_QUERIES       comma-list to restrict (default: headline set)
 
 Each query is materialized with the noop writer (computes every column —
@@ -52,15 +52,16 @@ def _noop_write(df):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     sf = float(sf_name.replace("sf", "") or 0.1) if sf_name.startswith("sf") else 0.1
 
     from dagli_spark import get_spark
     from dagli_spark.fixtures import SCALES, materialize
     from dagli_spark.northrule import run as northrule_run
+    from dagli_spark.session import default_cores
     import __spark_entry__ as entrymod
 
+    cpus = default_cores()
     spark = get_spark("dagli-spark-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 

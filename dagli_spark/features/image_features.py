@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dagli_spark.images.codec import decode_image
+from dagli_spark.images.codec import DECODE_ERRORS, decode_image
 from dagli_spark.images.phash import phash64
 
 DECODE_FIELDS = [
@@ -52,7 +52,7 @@ def _decode_one(data: bytes) -> tuple:
     payloads degrade to an all-null row like the batch path."""
     try:
         arr = decode_image(data)
-    except Exception:
+    except DECODE_ERRORS:
         return (None,) * len(DECODE_FIELDS)
     h, w, _ = arr.shape
     npx = h * w * 3
@@ -147,7 +147,7 @@ def _features_batch(datas: "pd.Series") -> list[tuple]:
             if (hw[0] * hw[1] * 3
                     > min(_MAX_PLANE_BYTES, len(b) * _MAX_COMPRESSION)):
                 raise ValueError("implausible header dims for payload size")
-        except Exception:
+        except DECODE_ERRORS:
             # corrupt/truncated payload: emit an all-null feature row —
             # one bad image must never fail the whole Spark stage (same
             # contract as the audio/video featurizers, features/multimodal)
@@ -169,7 +169,7 @@ def _features_batch(datas: "pd.Series") -> list[tuple]:
             for j, i in enumerate(idxs):
                 try:
                     decode_into_planes(vals[i], cf[j])
-                except Exception:
+                except DECODE_ERRORS:
                     # header parsed but the body is corrupt: null row; the
                     # zeroed slice still flows through the batched math
                     # (per-image reductions are independent) and is

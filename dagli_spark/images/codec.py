@@ -24,6 +24,12 @@ import numpy as np
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _QJPG_SIG = b"QJPG"
 
+# Everything the decoders raise on a corrupt payload: their own checks
+# raise ValueError, truncated headers fail struct.unpack and garbled bodies
+# fail inflation. Featurizers catch exactly these, so a bug (TypeError,
+# AttributeError, ...) still fails the stage instead of nulling rows.
+DECODE_ERRORS = (ValueError, struct.error, zlib.error)
+
 
 # ------------------------------------------------------------------- PNG
 
@@ -56,7 +62,8 @@ def _png_raw(data: bytes) -> tuple[int, int, np.ndarray]:
     """Chunk walk + inflate shared by :func:`decode_png` and
     :func:`decode_into_planes`: returns (w, h, raw) with ``raw`` the
     (h, 1 + 3w) filtered scanline buffer."""
-    assert data[:8] == _PNG_SIG, "not a PNG"
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
     pos, w, h = 8, 0, None
     idat = []
     while pos < len(data):
@@ -64,13 +71,17 @@ def _png_raw(data: bytes) -> tuple[int, int, np.ndarray]:
         typ = data[pos + 4:pos + 8]
         body = data[pos + 8:pos + 8 + ln]
         if typ == b"IHDR":
-            w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
-            assert depth == 8 and ctype == 2, "only 8-bit RGB supported"
+            w, h, depth, ctype, comp, filt, interlace = struct.unpack(
+                ">IIBBBBB", body[:13])
+            if depth != 8 or ctype != 2:
+                raise ValueError("only 8-bit RGB supported")
             # compression / filter-method / interlace bytes: only 0/0/0 is
             # supported — an Adam7-interlaced file would otherwise reshape
             # to garbage or raise an opaque ValueError downstream
-            assert body[10] == 0 and body[11] == 0, "nonstandard PNG methods"
-            assert body[12] == 0, "interlaced PNG not supported"
+            if comp != 0 or filt != 0:
+                raise ValueError("nonstandard PNG methods")
+            if interlace != 0:
+                raise ValueError("interlaced PNG not supported")
         elif typ == b"IDAT":
             idat.append(body)
         elif typ == b"IEND":
@@ -144,7 +155,8 @@ def encode_qjpg(arr: np.ndarray, quality: int = 90) -> bytes:
 
 
 def decode_qjpg(data: bytes) -> np.ndarray:
-    assert data[:4] == _QJPG_SIG, "not a QJPG"
+    if data[:4] != _QJPG_SIG:
+        raise ValueError("not a QJPG")
     w, h, quality, c = struct.unpack(">IIBB", data[4:14])
     step = _quant_step(quality)
     q = np.frombuffer(zlib.decompress(data[14:]), dtype=np.uint8)

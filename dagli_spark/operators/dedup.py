@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 
 from dagli_spark.functions.text import fingerprint, tokens, word_ngrams
 
+# Wide expressions: a loop-generated family of expressions (simhash's lanes
+# and bit recombine, minhash's salted mins and band keys) is built as one
+# SQL-text F.expr per output column, as phash_embedding_col does. Each F.* /
+# Column call costs ~3 py4j round trips to the driver JVM (2 of them
+# reflection lookups): the per-bit Column formulation made ~10,000 round
+# trips (~1 s) per simhash_dup_pairs build, whatever the data size.
+
 
 def exact_dedup(
     df: DataFrame, text_col: str, id_col: str, *, normalized: bool = True
@@ -97,21 +104,16 @@ def minhash_signature(
     ex = df.select(F.col(id_col), F.explode(shingles).alias("__t"))
     if hash_method == "poly31":
         ex = ex.select(id_col, _poly31(F.col("__t")).alias("__h"))
-        params = poly_hash_params(num_hashes, seed)
-        aggs = [
-            F.min(F.pmod(F.col("__h") * F.lit(a) + F.lit(b),
-                         F.lit(_POLY_M))).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(params)
-        ]
+        hashed = [f"pmod(__h * {a} + {b}, {_POLY_M})"
+                  for a, b in poly_hash_params(num_hashes, seed)]
     elif hash_method == "xxhash64":
         ex = ex.select(id_col, F.xxhash64(F.lit(seed), F.col("__t")).alias("__h"))
-        aggs = [
-            F.min(F.xxhash64(F.lit(seed + 1 + i), F.col("__h"))).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
+        hashed = [f"xxhash64({seed + 1 + i}, __h)" for i in range(num_hashes)]
     else:
         raise ValueError(hash_method)
-    return ex.groupBy(id_col).agg(*aggs)
+    # one SQL-text expression per aggregate (wide expressions, above)
+    return ex.groupBy(id_col).agg(
+        *[F.expr(f"min({h}) AS mh_{i}") for i, h in enumerate(hashed)])
 
 
 def minhash_lsh_pairs(
@@ -136,23 +138,23 @@ def minhash_lsh_pairs(
 
     band_keys = []
     for b in range(bands):
-        cols = [F.col(f"mh_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
+        cols = [f"mh_{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
         if hash_method == "poly31":
             # portable fold of the band's minhashes (SQL-replayable); rare
             # key collisions only ADD candidates, which the exact-Jaccard
             # verification then rejects — output is unaffected
-            k = F.lit(b + 1).cast("long")
+            k = f"CAST({b + 1} AS BIGINT)"
             for c in cols:
-                k = F.pmod(k * 31 + c + 1, F.lit(_POLY_M))
+                k = f"pmod({k} * 31 + {c} + 1, {_POLY_M})"
             band_keys.append(k)
         else:
-            band_keys.append(F.xxhash64(F.lit(b), *cols))
+            band_keys.append(f"xxhash64({b}, {', '.join(cols)})")
     # one row per (doc, band), ids ONLY — the shingle arrays never ride
     # through the self-join shuffle or the pair dedup (they are joined back
     # exactly once per verified candidate); shuffle = |docs| x bands 8-byte
     # keys, never |docs|^2 payloads.
     banded = sig.select(
-        id_col, F.explode(F.array(*band_keys)).alias("__band")
+        id_col, F.expr(f"explode(array({', '.join(band_keys)})) AS __band")
     )
     a = banded.alias("a")
     b_ = banded.alias("b")
@@ -281,35 +283,27 @@ def simhash(df: DataFrame, text_col: str, *, out: str = "simhash",
         tok = tok.withColumn("__h", F.xxhash64(F.lit(seed), F.col("__t")))
     else:
         raise ValueError(hash_method)
-    n_acc = nbits // 2
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for j in range(n_acc):
-        pair = F.shiftright(F.col("__h"), 2 * j).bitwiseAND(
-            F.lit(3).cast("long"))
-        aggs.append(F.sum(
-            (pair * F.lit(_LANE_SPREAD)).bitwiseAND(F.lit(_LANE_MASK))
-        ).alias(f"p{j}"))
-    packed = tok.groupBy(id_col).agg(*aggs)
-    sim = F.lit(0).cast("long")
-    for i in range(nbits):
-        j, k = divmod(i, 2)
-        cnt = F.shiftright(F.col(f"p{j}"), 32 * k).bitwiseAND(
-            F.lit(0xFFFFFFFF).cast("long"))
-        # boolean->long cast, not a CASE WHEN chain: 64 casts generate a
-        # third less code (measured: first pass 2.33 -> 1.63 s, steady
-        # 1.66 -> 1.46 s) — cnt/__n are never NULL post-aggregate
-        sim = sim.bitwiseOR(
-            F.shiftleft((cnt * 2 > F.col("__n")).cast("long"), i))
+    # one SQL-text expression per output column (wide expressions, above)
+    packed = tok.groupBy(id_col).agg(F.expr("count(1) AS __n"), *[
+        F.expr(f"sum(((shiftright(__h, {2 * j}) & 3L) * {_LANE_SPREAD}L)"
+               f" & {_LANE_MASK}L) AS p{j}")
+        for j in range(nbits // 2)])
+    # lane i//2, half i%2 holds bit i's count; boolean->long casts, not a
+    # CASE WHEN chain: 64 casts generate a third less code (measured: first
+    # pass 2.33 -> 1.63 s, steady 1.66 -> 1.46 s) — the counts and __n are
+    # never NULL post-aggregate
+    sim = " | ".join(
+        f"shiftleft(CAST((shiftright(p{i // 2}, {32 * (i % 2)}) & 4294967295L)"
+        f" * 2 > __n AS BIGINT), {i})"
+        for i in range(nbits))
     # loud guard, not a silent lane corruption: count(*) itself cannot
     # overflow, so a >= 2^31-token group aborts the job with a message
     # (assert_true) — reaching it requires billions of rows per id
-    guard = F.assert_true(
-        F.col("__n") < F.lit(_GROUP_CAP),
-        F.lit(f"simhash group exceeds {_GROUP_CAP} tokens: packed 32-bit "
-              "lanes would overflow"))
+    guard = (f"assert_true(__n < {_GROUP_CAP}L, 'simhash group exceeds "
+             f"{_GROUP_CAP} tokens: packed 32-bit lanes would overflow')")
     hashes = packed.select(
         F.col(id_col),
-        F.when(guard.isNull(), sim).alias(out),
+        F.expr(f"CASE WHEN {guard} IS NULL THEN {sim} END").alias(out),
     )
     # token-less docs keep a NULL simhash: coalescing to 0 would make every
     # empty document a hamming-0 "duplicate" of any real document whose

@@ -11,7 +11,14 @@ local[N]:
 - UTC session timezone (temporal semantics must not depend on host TZ),
 - shuffle partitions default to 2x cores locally (the reference's
   "2 x logical cores" worker default, core/.../dag/LocalDAGExecutor.java:14);
-  on a real cluster leave spark.sql.shuffle.partitions to AQE's coalescing.
+  on a real cluster leave spark.sql.shuffle.partitions to AQE's coalescing,
+- a generated-code cache of CODEGEN_CACHE_ENTRIES classes, and class names
+  without codegen stage ids: Spark's default cache (100) is smaller than
+  the working set of one pass over the driver queries, so LRU evicted
+  every class before its reuse and every repeated query recompiled all of
+  its classes with Janino,
+- cores and driver heap sized to the host it runs on (the CPUs this
+  process may run on, half of MemAvailable), not to a fixed cluster node.
 """
 
 from __future__ import annotations
@@ -24,6 +31,75 @@ from pyspark.sql import SparkSession
 # (core/.../dag/MultithreadedDAGExecutor.java:72).
 ARROW_BATCH_ROWS = 5000
 
+# Entries of Spark's generated-code cache (spark.sql.codegen.cache.maxEntries,
+# default 100). The engine's working set, measured at sf0.01 and local[4]
+# as CodegenMetrics' compilation count of a first pass in a fresh JVM: 710
+# classes over the 82 non-flagship queries(), 208 over bench.py's 13
+# headline queries, 68 for the flagship. At the default every class was
+# evicted before its reuse, so every repeated pass recompiled all of them
+# (1,074 compilations per pass over the 82 queries); with 2,048 a second
+# pass compiles none. A mean class is 3.3 KB of bytecode.
+CODEGEN_CACHE_ENTRIES = 2048
+
+# local[N] heap ceiling, reached at 96 GB available
+_MAX_HEAP_GB = 48
+
+
+def host_cpus() -> int:
+    """The CPUs this process may run on: its affinity mask, which a
+    container's cpuset narrows (os.cpu_count() reports the whole
+    machine)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else :func:`host_cpus`."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else host_cpus()
+
+
+def master_cores(master: str) -> int:
+    """The N of a ``local[N]`` master (``local[*]``: :func:`host_cpus`);
+    :func:`default_cores` for a master that names no count ("local", a
+    cluster URL)."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+    n = n.split(",")[0]  # local[N,maxFailures] carries a second field
+    if n == "*":
+        return host_cpus()
+    try:
+        return int(n)
+    except ValueError:
+        return default_cores()
+
+
+def mem_available_bytes() -> int | None:
+    """MemAvailable from /proc/meminfo; None where there is no such file."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_memory(mem_available: int | None = None) -> str:
+    """``$SPARK_DRIVER_MEMORY`` if set, else half of MemAvailable in whole
+    GiB, within [1, 48] GiB: local[N] runs every task in the driver JVM,
+    and the other half is left to the Python workers (one per core) and
+    the rest of the host. Without /proc/meminfo, the 48 GiB ceiling."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    avail = mem_available if mem_available is not None else mem_available_bytes()
+    if avail is None:
+        return f"{_MAX_HEAP_GB}g"
+    return f"{min(_MAX_HEAP_GB, max(1, avail // 2 // (1 << 30)))}g"
+
 
 def get_spark(
     app_name: str = "dagli_spark",
@@ -33,13 +109,13 @@ def get_spark(
 ) -> SparkSession:
     """Create (or get) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
+    ``master`` defaults to ``local[N]`` with N from :func:`default_cores`
     when no cluster master is configured — on a real cluster, pass
     ``master=None`` with a pre-configured environment and this is a no-op.
+    The driver heap comes from :func:`default_driver_memory`.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cores()}]"
 
     # Python workers must be able to import this package regardless of the
     # driver's cwd (the spark-submit equivalent is --py-files); prepend the
@@ -65,13 +141,7 @@ def get_spark(
         builder = builder.config(f"spark.executorEnv.{var}", os.environ[var])
 
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        n = n.split(",")[0]  # local[N,maxFailures] carries a second field
-        try:
-            cores = int(n) if n != "*" else (os.cpu_count() or 8)
-        except ValueError:
-            cores = 32
-        shuffle_partitions = max(8, 2 * cores)
+        shuffle_partitions = max(8, 2 * master_cores(master))
 
     conf = {
         "spark.sql.session.timeZone": "UTC",
@@ -100,7 +170,16 @@ def get_spark(
         # local[N] puts every "executor" in the driver JVM: size the heap
         # for N concurrent sort/window tasks (a real cluster sets
         # spark.executor.memory per node instead).
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
+        "spark.driver.memory": default_driver_memory(),
+        # see CODEGEN_CACHE_ENTRIES: repeated queries reuse their classes
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # the cache is keyed by source text, and a whole-stage class name
+        # carries its codegen stage id, which AQE assigns in stage-creation
+        # order — an order that varies with stage completion timing. With
+        # the id in the name, a repeated asof_bucketed recompiled 4 classes
+        # on some passes; without it, identical stages also share one class
+        # across queries (13 headline queries at sf0.01: 226 -> 208).
+        "spark.sql.codegen.useIdInClassName": "false",
         "spark.ui.enabled": "false",
         "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true",
     }

@@ -19,3 +19,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+@pytest.fixture(scope="session")
+def sf01_dir():
+    """The sf0.01 tier: the tables the driver queries' oracles pin."""
+    return os.path.join(TESTDATA, "sf0.01")

@@ -149,6 +149,53 @@ def test_zero_dim_header_degrades_to_null_row():
         assert got[0][0] is not None
 
 
+def test_decoder_bug_fails_instead_of_nulling(monkeypatch):
+    """Degrade on bad data, fail on bad code: the featurizers catch only
+    what the codec raises on a corrupt payload (codec.DECODE_ERRORS), so a
+    planted bug in the decoder (a TypeError) propagates out of both the
+    batched and the single-image path instead of becoming null rows."""
+    from dagli_spark.features import image_features
+    from dagli_spark.images import codec
+
+    def buggy(*args):
+        raise TypeError("planted decoder bug")
+
+    ok = encode_png(np.zeros((8, 8, 3), dtype=np.uint8))
+    monkeypatch.setattr(codec, "decode_into_planes", buggy)
+    with pytest.raises(TypeError, match="planted decoder bug"):
+        image_features._features_batch(pd.Series([ok]))
+    monkeypatch.setattr(image_features, "decode_image", buggy)
+    with pytest.raises(TypeError, match="planted decoder bug"):
+        image_features._decode_one(ok)
+
+
+def test_corrupt_ihdr_raises_decode_error():
+    """Unsupported or truncated IHDR fields raise one of
+    codec.DECODE_ERRORS (ValueError here), never an AssertionError or
+    IndexError that the featurizers would treat as a bug."""
+    import struct
+    import zlib
+
+    from dagli_spark.images.codec import DECODE_ERRORS
+
+    good = encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
+    ihdr_at = good.index(b"IHDR") + 4
+    for patch in ([(8, 16)],              # 16-bit depth
+                  [(9, 6)],               # RGBA
+                  [(12, 1)]):             # Adam7 interlace
+        body = bytearray(good[ihdr_at:ihdr_at + 13])
+        for off, val in patch:
+            body[off] = val
+        bad = (good[:ihdr_at] + bytes(body)
+               + struct.pack(">I", zlib.crc32(b"IHDR" + bytes(body)) & 0xFFFFFFFF)
+               + good[ihdr_at + 17:])
+        with pytest.raises(ValueError):
+            decode_image(bad)
+    short = (good[:8] + struct.pack(">I", 11) + b"IHDR"
+             + good[ihdr_at:ihdr_at + 11])
+    with pytest.raises(DECODE_ERRORS):
+        decode_image(short)
+
 def test_qjpg_psnr_gate():
     """input_hint: PSNR >= 40 dB for the lossy path at q90."""
     rng = np.random.RandomState(11)

@@ -1,6 +1,9 @@
 """Plan-shape regression tests (pushdown / pruning / shuffle counts),
 salted aggregation correctness, and source readers."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from dagli_spark.fixtures import materialize
@@ -9,6 +12,7 @@ from dagli_spark.operators.asof import asof_join
 from dagli_spark.operators.skew import hot_keys, salted_agg, spread_for_cpu
 from dagli_spark.plans.inspect import (
     count_exchanges,
+    final_adaptive_plan,
     pushed_filters,
     scan_columns,
 )
@@ -274,6 +278,47 @@ def test_minhash_no_persisted_cache(spark, sf_dir):
     assert "ReusedExchange" in plan  # banding subtree evaluated once
     jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
     assert jmap.isEmpty(), "minhash left persisted RDDs behind"
+
+
+# FileScan / Generate / shuffle Exchange / BroadcastExchange /
+# ReusedExchange nodes in the AQE-final plan of each dedup/ANN driver row
+# at sf0.01 (the per-bit Column and the SQL-text builds of the dedup
+# operators plan alike) — a rewrite that re-runs a lineage (the reverted
+# 16-bit-lane simhash: 4 scans, 3 explodes) or loses the banding
+# subtree's stage reuse changes them.
+DEDUP_PLAN_NODES = {
+    "simhash_pairs": dict(FileScan=2, Generate=3, Exchange=1,
+                          BroadcastExchange=2, ReusedExchange=2),
+    "simhash_portable": dict(FileScan=2, Generate=3, Exchange=1,
+                             BroadcastExchange=2, ReusedExchange=2),
+    "minhash_pairs": dict(FileScan=2, Generate=5, Exchange=3,
+                          BroadcastExchange=3, ReusedExchange=6),
+    "minhash_portable": dict(FileScan=2, Generate=5, Exchange=3,
+                             BroadcastExchange=3, ReusedExchange=6),
+    "embedding_dedup": dict(FileScan=8, Generate=0, Exchange=1,
+                            BroadcastExchange=1, ReusedExchange=0),
+}
+
+
+def _final_plan_nodes(plan: str) -> dict:
+    """Operator counts of the final section of an AQE plan string (the
+    string also prints the initial plan, which would count nodes twice)."""
+    final = plan.split("== Initial Plan ==")[0]
+    # the operator that opens a tree line, after its codegen stage id: a
+    # ReusedExchange line also names the exchange it reuses
+    return {node: len(re.findall(rf"^[\s:|+-]*(?:\*\(\d+\) )?{node}\b",
+                                 final, re.M))
+            for node in DEDUP_PLAN_NODES["simhash_pairs"]}
+
+
+@pytest.mark.parametrize("name", sorted(DEDUP_PLAN_NODES))
+def test_dedup_final_plan_shape(spark, sf01_dir, name):
+    """Execute the driver row at sf0.01, then pin its AQE-final node
+    counts."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.queries()[name](spark, sf01_dir)
+    assert _final_plan_nodes(final_adaptive_plan(df)) == DEDUP_PLAN_NODES[name]
 
 
 def test_iceberg_catalog_real_table(spark, sf_dir, tmp_path):
