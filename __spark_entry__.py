@@ -49,10 +49,11 @@ from dagli_spark.functions import core as C
 from dagli_spark.functions import distribution as D
 from dagli_spark.functions import text as T
 from dagli_spark.functions.vector import norm
+from dagli_spark.sources.readers import parquet_reader
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return parquet_reader(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _sql_str(s: str) -> str:

@@ -23,6 +23,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dagli_spark.sources.readers import parquet_reader
+
 
 def content_key(*parts) -> str:
     h = hashlib.sha256()
@@ -86,11 +88,11 @@ class Checkpointer:
         if self.has(name, key):
             self._log({"stage": name, "key": key, "event": "resume_hit",
                        "path": path, "ts": time.time()})
-            return spark.read.parquet(path)
+            return parquet_reader(spark, path)
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+        out = parquet_reader(spark, path)
         # per-partition lineage + row counts (spark_partition_id of the
         # written table's read-back layout) — cheap second pass over footer
         # metadata + a count by partition.
@@ -153,8 +155,8 @@ def checkpointed_northrule(
 
     def build_feats():
         return event_features(
-            spark.read.parquet(paths["image_events"]),
-            spark.read.parquet(paths["images"]),
+            parquet_reader(spark, paths["image_events"]),
+            parquet_reader(spark, paths["images"]),
             **{k: v for k, v in opts.items() if k in ev_opts},
         )
 
@@ -165,7 +167,7 @@ def checkpointed_northrule(
 
     def build_out():
         out = asof_features(
-            spark.read.parquet(paths["queries"]), feats,
+            parquet_reader(spark, paths["queries"]), feats,
             **{k: v for k, v in opts.items() if k in asof_opts},
         )
         return assemble_vector(out)

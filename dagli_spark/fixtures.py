@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from dagli_spark.features.image_features import _decode_one
 from dagli_spark.images.codec import encode_image
+from dagli_spark.sources.readers import parquet_reader
 
 _SM = np.uint64(0x9E3779B97F4A7C15)
 
@@ -311,7 +312,7 @@ def materialize(spark: SparkSession, scale: str, *, seed: int = 42,
         return paths
     images = generate_images(spark, n_img, seed=seed)
     images.write.mode("overwrite").parquet(paths["images"])
-    images = spark.read.parquet(paths["images"])
+    images = parquet_reader(spark, paths["images"])
     events, queries = generate_events_and_queries(
         spark, images, n_img, n_ent, n_ev, n_q, seed=seed
     )

@@ -28,6 +28,8 @@ KFoldCrossTrained anti-leakage contract
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +40,7 @@ from dagli_spark.features.image_features import (
 )
 from dagli_spark.operators import window_features as wf
 from dagli_spark.operators.asof import MATCHED_TIME, asof_join
+from dagli_spark.sources.readers import footer_rows, parquet_reader
 
 FEATURE_NAMES = [
     "label_locf", "label_lag1", "label_avg5", "cnt_1h", "session_id",
@@ -69,51 +72,46 @@ def _window_block(df: DataFrame, pkeys: list[str]):
     hot-entity bucketed path) — ONE definition so the two paths cannot
     drift. Emits ``__is_new`` (session-start flag) instead of a finished
     session id: the two paths turn it into session_id differently (plain
-    cumulative sum vs per-bucket sum + stitched offsets)."""
+    cumulative sum vs per-bucket sum + stitched offsets). One projection:
+    every column is one window spec's expression, so no column reads
+    another (a lag of a derived value lags its expression)."""
     w = wf.spec(pkeys, ["event_time", "eseq"])
-    out = wf.with_lag(df, "label", 1, w, alias="label_lag1")
-    out = out.withColumn("phash_prev", F.lag("phash").over(w))
-    out = out.withColumn(
-        "hamming_prev",
-        F.coalesce(phash_hamming_col("phash", F.col("phash_prev")), F.lit(-1))
-        .cast("double"),
-    ).drop("phash_prev")
-    out = wf.rolling(out, {"label_avg5": F.avg("label")}, w, rows=(-4, 0))
-    out = out.withColumn(
-        "epoch_s",
-        F.floor(F.unix_micros(F.col("event_time").cast("timestamp")) / 1_000_000),
-    )
+    epoch_s = F.floor(
+        F.unix_micros(F.col("event_time").cast("timestamp")) / 1_000_000)
     prev_t = F.lag("event_time").over(w)
-    out = out.withColumn(
-        "__is_new",
-        F.when(prev_t.isNull()
-               | (F.col("event_time") > prev_t + F.expr(_SESSION_GAP)), 1)
-        .otherwise(0),
-    )
-    out = out.withColumn(
-        "secs_since_prev",
-        F.coalesce(
-            (F.col("epoch_s") - F.lag("epoch_s").over(w)).cast("double"),
-            F.lit(-1.0),
-        ),
-    )
+    out = df.withColumns({
+        "label_lag1": F.lag("label").over(w),
+        "hamming_prev": F.coalesce(
+            phash_hamming_col("phash", F.lag("phash").over(w)), F.lit(-1)
+        ).cast("double"),
+        "label_avg5": F.avg("label").over(w.rowsBetween(-4, 0)),
+        "epoch_s": epoch_s,
+        "__is_new": F.when(
+            prev_t.isNull()
+            | (F.col("event_time") > prev_t + F.expr(_SESSION_GAP)), 1
+        ).otherwise(0),
+        "secs_since_prev": F.coalesce(
+            (epoch_s - F.lag(epoch_s).over(w)).cast("double"), F.lit(-1.0)),
+    })
     return out, w
 
 
 def _plain_event_windows(ev: DataFrame) -> DataFrame:
     out, w = _window_block(ev, ["entity_id"])
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = out.withColumn("session_id", F.sum("__is_new").over(cum) - 1) \
-        .drop("__is_new")
     # The one differently-ordered window comes LAST: every (event_time,
     # eseq)-ordered window above shares a single sort, and cnt_1h's
     # (epoch_s)-ordered range frame adds exactly one more — interleaving it
     # mid-chain (as round 2 did) made the planner re-sort the full event
     # table a THIRD time (2 sorts total now, pinned by
     # tests/test_images_northrule.py).
-    w_range = wf.spec("entity_id", ["epoch_s"])
-    return wf.rolling(out, {"cnt_1h": F.count(F.lit(1))}, w_range,
-                      range_=(-_RANGE_LOOKBACK_S, 0))
+    w_range = wf.spec("entity_id", ["epoch_s"]).rangeBetween(
+        -_RANGE_LOOKBACK_S, 0)
+    return out.select(
+        *[c for c in out.columns if c != "__is_new"],
+        (F.sum("__is_new").over(cum) - 1).alias("session_id"),
+        F.count(F.lit(1)).over(w_range).alias("cnt_1h"),
+    )
 
 
 def _hot_carry_rows(events: DataFrame, is_hot, width_us: int, *,
@@ -310,12 +308,33 @@ def _bucketed_event_windows(events: DataFrame, dim: DataFrame,
     return out.drop("__is_new", "__sess_local", "__off", "__b", "__carry")
 
 
-def detect_hot_entities(events: DataFrame, min_rows: int, *,
+def _hot_threshold(min_rows):
+    """``min_rows`` if it is a usable hot-entity threshold: None (detection
+    disabled) or an int >= 1; anything else raises ValueError."""
+    if min_rows is None or (isinstance(min_rows, numbers.Integral)
+                            and not isinstance(min_rows, bool)
+                            and min_rows >= 1):
+        return min_rows
+    raise ValueError(
+        f"hot_min_rows must be None or an int >= 1, got {min_rows!r}")
+
+
+def detect_hot_entities(events: DataFrame, min_rows: int | None, *,
                         top: int = 64) -> list:
     """Entities whose event count makes a single window partition a
     straggler (the fixture's hot entities own ~5% of all events each at
     the scale tier). One column-pruned aggregate; returns at most ``top``
-    ids with their counts and time spans (driver-side, tiny)."""
+    ids with their counts and time spans (driver-side, tiny).
+
+    Returns ``[]`` without the aggregate when ``min_rows`` is None or when
+    ``events`` is a bare Parquet scan whose footers hold fewer than
+    ``min_rows`` rows in all (:func:`~dagli_spark.sources.readers.footer_rows`),
+    since then no entity can reach it."""
+    if _hot_threshold(min_rows) is None:
+        return []
+    rows = footer_rows(events)
+    if rows is not None and rows < min_rows:
+        return []
     t = F.unix_micros(F.col("event_time").cast("timestamp"))
     return (
         events.groupBy("entity_id")
@@ -338,11 +357,11 @@ def event_features(events: DataFrame, images: DataFrame,
     per-image decode stats ride along from the start (computed once per
     distinct image), so the whole pipeline is a single forward pass.
 
-    Skew: entities with >= ``hot_min_rows`` events (detected by one cheap
-    aggregate; ``None`` disables) are routed through the time-bucketed
-    two-phase window path (:func:`_bucketed_event_windows`) — identical
-    results, no single-task-per-entity straggler. The bucket width targets
-    ~``hot_target_rows`` rows per (entity, bucket) task.
+    Skew: entities with >= ``hot_min_rows`` events (an int >= 1; ``None``
+    disables; anything else raises ValueError) are routed through the
+    time-bucketed two-phase window path (:func:`_bucketed_event_windows`)
+    — identical results, no single-task-per-entity straggler. The bucket
+    width targets ~``hot_target_rows`` rows per (entity, bucket) task.
 
     Threshold calibration (measured, scale tier, local[32]): a 120k-row
     entity's window task is only ~0.7 s (sort+6 window exprs are cheap),
@@ -353,11 +372,14 @@ def event_features(events: DataFrame, images: DataFrame,
     events is ~10^9 rows in ONE task — hours — so the default fires long
     before that; set it to match your cluster's per-task comfort zone.
 
-    ``hot_rows`` (the output of :func:`detect_hot_entities`, possibly
-    ``[]``) skips the detection aggregate: composing this plan otherwise
-    triggers an eager collect() over events on every call — pass a
-    precomputed list when building the same pipeline repeatedly (tests,
+    Detection (:func:`detect_hot_entities`) costs no job when ``events``
+    is a bare Parquet scan whose footers hold fewer than ``hot_min_rows``
+    rows in all; any other ``events`` runs its aggregate and a collect()
+    while this plan is composed. ``hot_rows`` (the detection's output,
+    possibly ``[]``) skips detection altogether — pass a precomputed list
+    when building the same pipeline repeatedly over such inputs (tests,
     a feature service re-planning per request)."""
+    hot_min_rows = _hot_threshold(hot_min_rows)
     if with_pixels:
         dim = image_stats(events, images)
     else:
@@ -366,10 +388,8 @@ def event_features(events: DataFrame, images: DataFrame,
     # vanish — dropping it would shift every downstream lag/session/count
     # feature for its neighbors; unresolved rows just get null phash/pixel
     # stats (hamming_prev already coalesces null -> -1)
-    if hot_rows is not None:
-        hot = hot_rows
-    else:
-        hot = detect_hot_entities(events, hot_min_rows) if hot_min_rows else []
+    hot = hot_rows if hot_rows is not None \
+        else detect_hot_entities(events, hot_min_rows)
     if not hot:
         return _plain_event_windows(events.join(dim, "image_id", "left"))
     span_us = max(int(r["mx"]) - int(r["mn"]) for r in hot) + 1_000_000
@@ -394,10 +414,8 @@ def asof_features(
     vals = ["image_id", "label", "label_lag1", "label_avg5", "cnt_1h",
             "session_id", "secs_since_prev", "hamming_prev"]
     vals += [c for c in ("phash", *PX_COLS) if c in featured_events.columns]
-    ev = featured_events.select(
-        "entity_id", "event_time", "eseq",
-        *[F.col(v).alias(f"ev_{v}") for v in vals],
-    )
+    ev = featured_events.selectExpr(
+        "entity_id", "event_time", "eseq", *[f"`{v}` AS `ev_{v}`" for v in vals])
     return asof_join(
         queries, ev, on="entity_id", left_time="asof_time",
         right_time="event_time",
@@ -410,23 +428,24 @@ def asof_features(
 def assemble_vector(df: DataFrame) -> DataFrame:
     """Step 5 over :func:`asof_features` output: ``feature_vector`` (a
     feature absent from the frame — px_* without pixels — is NaN) and the
-    64-dim phash embedding."""
-    def pick(n):
-        return F.col(f"ev_{n}") if f"ev_{n}" in df.columns else F.lit(None)
+    64-dim phash embedding, in one projection. Each slot's source is SQL
+    text; the NaN stays a Column literal, which (unlike SQL's nullable
+    ``CAST('NaN' AS DOUBLE)``) keeps the vector's elements non-null."""
+    present = set(df.columns)
 
-    named = {
-        "label_locf": pick("label"),
-        "cnt_1h": pick("cnt_1h").cast("double"),
-        "session_id": pick("session_id").cast("double"),
-    }
-    vec = F.array(*[
-        F.coalesce(named.get(n, pick(n)), F.lit(float("nan"))).cast("double")
-        for n in FEATURE_NAMES
-    ])
-    return df.withColumn("feature_vector", vec).withColumn(
-        "phash_embedding",
-        F.when(F.col("ev_phash").isNotNull(), phash_embedding_col("ev_phash")),
-    )
+    def source(n):
+        col = "ev_label" if n == "label_locf" else f"ev_{n}"
+        v = f"`{col}`" if col in present else "NULL"
+        return f"CAST({v} AS DOUBLE)" if n in ("cnt_1h", "session_id") else v
+
+    nan = F.lit(float("nan"))
+    vec = F.array(*[F.coalesce(F.expr(source(n)), nan).cast("double")
+                    for n in FEATURE_NAMES])
+    return df.withColumns({
+        "feature_vector": vec,
+        "phash_embedding": F.when(F.col("ev_phash").isNotNull(),
+                                  phash_embedding_col("ev_phash")),
+    })
 
 
 def build_features(
@@ -470,7 +489,7 @@ def leakage_audit(result: DataFrame, *, strict: bool = False) -> dict:
 
 
 def run(spark: SparkSession, paths: dict[str, str], **opts) -> DataFrame:
-    images = spark.read.parquet(paths["images"])
-    events = spark.read.parquet(paths["image_events"])
-    queries = spark.read.parquet(paths["queries"])
+    images = parquet_reader(spark, paths["images"])
+    events = parquet_reader(spark, paths["image_events"])
+    queries = parquet_reader(spark, paths["queries"])
     return build_features(queries, events, images, **opts)

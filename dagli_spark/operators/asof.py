@@ -70,15 +70,20 @@ def _check_clash(values, queries):
         )
 
 
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier. Per-value column families are built
+    as SQL text (one expression, not ~20 py4j round trips per value)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _event_state(right_time, values, tiebreak):
     """(state struct, tie column) — ONE definition shared by the union
     path (_sides) and the bucketed pass-1 aggregate, so the
     ``coalesce(state, carry)`` in pass 3 can never see two drifted struct
     layouts."""
-    state = F.struct(
-        F.col(right_time).alias(MATCHED_TIME),
-        *[F.col(v).alias(v) for v in values],
-    )
+    fields = [(right_time, MATCHED_TIME)] + [(v, v) for v in values]
+    state = F.expr("struct(" + ", ".join(
+        f"{_q(c)} AS {_q(name)}" for c, name in fields) + ")")
     tie = F.col(tiebreak) if tiebreak else F.lit(0)
     return state, tie
 
@@ -197,15 +202,13 @@ def _locf_scan(merged: DataFrame, keys: list[str], strict: bool) -> DataFrame:
 
 def _finish(scanned, out_cols, values, left_time, tolerance, keep_matched_time):
     res = scanned.where(F.col(_SIDE) == 1)
-    state = F.col(_STATE)
     if tolerance is not None:
+        state = F.col(_STATE)
         in_tol = state[MATCHED_TIME] >= (F.col(left_time) - tolerance)
-        state = F.when(in_tol, state)
-    sel = [F.col(c) for c in out_cols]
-    sel += [state[v].alias(v) for v in values]
-    if keep_matched_time:
-        sel.append(state[MATCHED_TIME].alias(MATCHED_TIME))
-    return res.select(*sel)
+        res = res.withColumn(_STATE, F.when(in_tol, state))
+    fields = values + ([MATCHED_TIME] if keep_matched_time else [])
+    return res.selectExpr(*[_q(c) for c in out_cols],
+                          *[f"{_q(_STATE)}.{_q(v)} AS {_q(v)}" for v in fields])
 
 
 def _asof_join_bucketed(

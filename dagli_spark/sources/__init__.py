@@ -4,9 +4,10 @@ from dagli_spark.sources.readers import (
     concat_columns,
     dsv_reader,
     multiplexed_union,
+    parquet_reader,
     sample_reader,
     shuffled_reader,
 )
 
 __all__ = ["dsv_reader", "multiplexed_union", "concat_columns",
-           "sample_reader", "shuffled_reader"]
+           "parquet_reader", "sample_reader", "shuffled_reader"]

@@ -35,6 +35,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dagli_spark.sources.readers import parquet_reader
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff an Iceberg SparkCatalog class is on the JVM classpath."""
@@ -184,4 +186,4 @@ def read_table(spark: SparkSession, identifier: str, *,
         with open(sidecar) as f:
             schema = StructType.fromJson(json.load(f)["schema"])
         return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
+    return parquet_reader(spark, path)

@@ -13,14 +13,196 @@ are gated with a clear error instead of a stub import.
 | LazyShuffledBufferReader (objectio-core/.../LazyShuffledBufferReader.java:9-14) | :func:`shuffled_reader` |
 | LazyMapped/Filtered/FlatMappedReader | select / where / explode (Spark lazy plans are the exact analogue) |
 | KryoFileReader / BigListReader (spill & cache) | df.persist(DISK_ONLY) / df.cache() + dagli_spark.checkpoint |
+
+Engine Parquet goes through :func:`parquet_reader`, which takes the schema
+from the files' footers on the driver instead of running Spark's
+single-task schema-inference job per read.
 """
 
 from __future__ import annotations
 
+import json
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dagli_spark.functions.rand import sample_segment, shuffle_key
+
+# Footers read on the driver per table; a table of more files falls back
+# to Spark's inference (one job, paid against a large input).
+MAX_FOOTERS = 256
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+# the Parquet confs under whose defaults the Arrow mapping equals Spark's
+_SCHEMA_CONFS = {"spark.sql.parquet.binaryAsString": "false",
+                 "spark.sql.parquet.int96AsTimestamp": "true",
+                 "spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
+
+
+class _NoMapping(Exception):
+    """A footer type whose Spark mapping this module does not reproduce."""
+
+
+def parquet_reader(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema Spark would infer,
+    taken from the footers on the driver (:func:`footer_schema`) — no
+    inference job. Non-local paths, Hive-partitioned or nested
+    directories, tables of more than ``MAX_FOOTERS`` files and footers
+    that disagree fall back to Spark's own inference."""
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, from pyarrow reads
+    of the footers, or None where that cannot be reproduced.
+
+    Spark-written files carry their StructType as JSON under
+    ``org.apache.spark.sql.parquet.row.metadata``, which Spark's inference
+    reads first. Other files go through ``from_arrow_schema`` with each
+    timestamp mapped by its Parquet column: ``isAdjustedToUTC`` (and
+    INT96, which Spark reads as adjusted) gives TimestampType, otherwise
+    TimestampNTZType. Neither plain mapping alone is right: Arrow's
+    zone-less default misreads pyarrow's NTZ columns, and
+    ``prefer_timestamp_ntz`` misreads INT96."""
+    files = _local_data_files(spark, path)
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        metas = [pq.read_metadata(f) for f in files]
+        if any(_SPARK_SCHEMA not in (m.metadata or {}) for m in metas) and any(
+                spark.conf.get(k, v).lower() != v for k, v in _SCHEMA_CONFS.items()):
+            return None
+        schemas = {_schema_json(m) for m in metas}
+    except (_NoMapping, OSError, ValueError):
+        return None
+    return StructType.fromJson(_nullable(json.loads(schemas.pop()))) \
+        if len(schemas) == 1 else None
+
+
+def _nullable(schema_json):
+    """A schema JSON with every field and element nullable, as Spark makes
+    any file source's schema."""
+    if isinstance(schema_json, dict):
+        return {k: True if k in ("nullable", "containsNull", "valueContainsNull")
+                else v if k == "metadata" else _nullable(v)
+                for k, v in schema_json.items()}
+    if isinstance(schema_json, list):
+        return [_nullable(v) for v in schema_json]
+    return schema_json
+
+
+def footer_rows(df: DataFrame) -> int | None:
+    """Summed footer ``num_rows`` of the Parquet files ``df`` scans when
+    ``df`` is a bare file scan — Project and Filter nodes over one local
+    Parquet file relation of at most ``MAX_FOOTERS`` files — so an upper
+    bound on ``df.count()``; None for any other plan."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    if node.nodeName() != "LogicalRelation":
+        return None
+    relation = node.relation()
+    if (relation.getClass().getSimpleName() != "HadoopFsRelation"
+            or relation.fileFormat().shortName() != "parquet"
+            or relation.partitionSchema().size()):
+        return None
+    uris = list(relation.location().inputFiles())  # qualified URIs
+    if len(uris) > MAX_FOOTERS \
+            or any(urlparse(u).scheme != "file" for u in uris):
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(pq.read_metadata(unquote(urlparse(u).path)).num_rows
+                   for u in uris)
+    except (OSError, ValueError):
+        return None
+
+
+def _local_fs(spark: SparkSession) -> bool:
+    """Does a scheme-less path name the driver's own filesystem?"""
+    default = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return urlparse(default or "file:///").scheme == "file"
+
+
+def _local_data_files(spark: SparkSession, path: str) -> list[str] | None:
+    """The files Spark's listing would scan under ``path``: the file
+    itself, or a flat directory's entries that do not start with ``_`` or
+    ``.``. None for a non-local path, a directory with subdirectories
+    (Hive partitions carry typed partition columns) or Parquet summary
+    files, or more than ``MAX_FOOTERS`` files."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        path = unquote(url.path)
+    elif url.scheme or not _local_fs(spark):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in os.scandir(path):
+        name = entry.name
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+            continue
+        if not entry.is_file():
+            return None
+        files.append(entry.path)
+    return sorted(files) if len(files) <= MAX_FOOTERS else None
+
+
+def _schema_json(meta) -> str:
+    """One footer's Spark schema as JSON (see :func:`footer_schema`)."""
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA)
+    if spark_json is not None:
+        return spark_json.decode()
+    from pyspark.sql.pandas.types import from_arrow_schema
+    import pyarrow as pa
+
+    leaves = iter(meta.schema.column(i) for i in range(len(meta.schema)))
+    arrow = meta.schema.to_arrow_schema()
+    zoned = pa.schema([f.with_type(_zoned(f.type, leaves)) for f in arrow])
+    return from_arrow_schema(zoned, prefer_timestamp_ntz=True).json()
+
+
+def _zoned(at, leaves):
+    """``at`` with each timestamp leaf zoned (UTC) or zone-less by its
+    Parquet column, consuming ``leaves`` (the footer's leaf columns, in
+    the depth-first order Arrow's leaves follow). Raises :class:`_NoMapping`
+    for a type whose Spark mapping differs from ``from_arrow_type``'s
+    (unsigned ints, nanosecond timestamps, times, dictionaries, ...)."""
+    import pyarrow as pa
+    import pyarrow.types as t
+
+    if t.is_struct(at):
+        return pa.struct([f.with_type(_zoned(f.type, leaves)) for f in at])
+    if t.is_list(at) or t.is_large_list(at):
+        return pa.list_(at.value_field.with_type(_zoned(at.value_type, leaves)))
+    if t.is_map(at):
+        key = _zoned(at.key_type, leaves)
+        return pa.map_(key, at.item_field.with_type(_zoned(at.item_type, leaves)))
+    col = next(leaves)
+    if t.is_timestamp(at):
+        if col.physical_type == "INT96":
+            return pa.timestamp("us", "UTC")
+        logical = json.loads(col.logical_type.to_json())
+        if logical.get("timeUnit") not in ("milliseconds", "microseconds"):
+            raise _NoMapping(f"timestamp unit of {col.path}")
+        return pa.timestamp("us", "UTC" if logical["isAdjustedToUTC"] else None)
+    plain = (t.is_boolean, t.is_signed_integer, t.is_float32, t.is_float64,
+             t.is_string, t.is_large_string, t.is_binary, t.is_large_binary,
+             t.is_date32, t.is_decimal128)
+    if any(is_type(at) for is_type in plain):
+        return at
+    raise _NoMapping(f"{at} at {col.path}")
 
 
 def dsv_reader(
