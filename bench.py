@@ -2,9 +2,12 @@
 """Benchmark harness: headline queries + the north-rule feature job.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>,
-   "feature_vectors_per_sec": N, "cpus": N}
+  {"metric": "...", "value": <sum of steady sec>, "unit": "sec",
+   "queries": {name: steady sec, ...}, "queries_cold": {name: sec, ...},
+   "sf": <sf>, "feature_vectors_per_sec": N, "cpus": N, ...}
+
+Every query runs once cold, then 3 steady passes; the best steady pass
+is its ``queries`` time.
 
 Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
@@ -43,7 +46,7 @@ HEADLINE = [
     "knn_bruteforce",
 ]
 
-_FIXTURE_SCALE = {"sf0.001": "smoke", "sf0.01": "correctness", "sf0.1": "bench"}
+STEADY_PASSES = 3
 
 
 def _noop_write(df):
@@ -59,6 +62,7 @@ def main() -> None:
     from dagli_spark.fixtures import SCALES, materialize
     from dagli_spark.northrule import run as northrule_run
     from dagli_spark.session import default_cores
+    from dagli_spark.sources.readers import parquet_reader
     import __spark_entry__ as entrymod
 
     cpus = default_cores()
@@ -69,84 +73,74 @@ def main() -> None:
     names = ([n.strip() for n in wanted.split(",") if n.strip()]
              if wanted else HEADLINE)
 
-    scale = _FIXTURE_SCALE.get(sf_name, "correctness")
+    scale = entrymod.northrule_tier(sf_dir)
     paths = materialize(spark, scale)  # cached one-time generation
     n_queries = SCALES[scale][3]
 
-    qmap = entrymod.queries()
-    unknown = [n for n in names
-               if n != "northrule_features" and n not in qmap]
+    qmap = {**entrymod.queries(),
+            "northrule_features": lambda s, _: northrule_run(s, paths)}
+    unknown = [n for n in names if n not in qmap]
     if unknown:  # fail fast, not mid-suite with a KeyError
         raise SystemExit(f"BENCH_QUERIES names not in queries(): {unknown}")
-    timings: dict[str, float] = {}
-    fv_per_sec = None
 
-    # one warmup pass at smoke scale: JIT + codegen + Python worker spin-up
-    # (steady-state throughput is the metric; cold-start is reported too)
+    # one warmup pass at smoke scale: JVM, Python worker spin-up
     warm_paths = materialize(spark, "smoke")
     t0 = time.time()
     _noop_write(northrule_run(spark, warm_paths))
     cold_start_sec = round(time.time() - t0, 3)
     # warm the measured tier's input files too (footers + OS page cache):
-    # steady-state scan is the metric — a real cluster's scan bandwidth
-    # scales with nodes, the sandbox's single cold disk does not. This
-    # covers the northrule fixture AND every sf_dir table the headline
-    # queries scan (so single-shot queries run warm, same protocol as the
-    # best-of-2 flagship).
+    # a real cluster's scan bandwidth scales with nodes, the sandbox's
+    # single cold disk does not. This covers the northrule fixture AND
+    # every sf_dir table the headline queries scan.
     for p in paths.values():
-        spark.read.parquet(p).write.format("noop").mode("overwrite").save()
+        _noop_write(parquet_reader(spark, p))
     for t in ("events", "documents", "embeddings", "lineitem", "orders",
               "customer", "nation", "region"):
         tp = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(tp):
-            spark.read.parquet(tp).write.format("noop").mode("overwrite").save()
+            _noop_write(parquet_reader(spark, tp))
 
-    northrule_cold_sec = None
+    # Every query runs once cold, then STEADY_PASSES more times; the best
+    # steady pass counts. The JVM compiles each query's generated code on
+    # its first execution and tiers it up to C2 over the next few (measured
+    # warmup curve of the flagship at sf0.1/32: 38 s -> 21 s -> 5.2 s ->
+    # 5.3 s; a single-shot query reads about 2x its steady time). A fixed
+    # pass count, not an improvement-threshold early stop: a slow C2 ramp
+    # (38 -> 36 -> 5.2) fails the threshold while still half-warmed.
+    timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
     for name in names:
-        t0 = time.time()
-        if name == "northrule_features":
-            # steady-state fv/sec is the headline metric; the cold first
-            # execution (JIT + first-scan effects) is reported separately.
-            # The JVM tiers whole-stage-codegen up to C2 over the first few
-            # executions (measured warmup curve at sf0.1/32: 38 s -> 21 s ->
-            # 5.2 s -> 5.3 s), so a FIXED 4 passes, best counts — the same
-            # protocol as BENCH/run_scaling.py. An improvement-threshold
-            # early stop is biased: a slow C2 ramp (38 -> 36 -> 5.2) fails
-            # the threshold while still half-warmed and reports the 36.
-            _noop_write(northrule_run(spark, paths))
-            northrule_cold_sec = round(time.time() - t0, 3)
-            best = northrule_cold_sec
-            for _ in range(3):
-                t1 = time.time()
-                _noop_write(northrule_run(spark, paths))
-                best = min(best, time.time() - t1)
-            dt = best
-            fv_per_sec = round(n_queries / dt, 1)
-        else:
+        passes = []
+        for _ in range(1 + STEADY_PASSES):
+            t0 = time.time()
             _noop_write(qmap[name](spark, sf_dir))
-            dt = time.time() - t0
-        timings[name] = round(dt, 3)
-        # queries are independent: drop persisted intermediates (e.g. the
-        # dedup candidate sets) so no query pays for a predecessor's cache,
-        # and force a JVM GC — Spark's ContextCleaner only removes dead
-        # shuffle files when the driver GCs, which a mostly-idle driver
-        # heap never triggers on its own (files otherwise accumulate and
-        # slow later shuffle-heavy queries)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+            passes.append(time.time() - t0)
+            # passes are independent: drop persisted intermediates (e.g.
+            # the dedup candidate sets) so no pass reads a predecessor's
+            # cache, and force a JVM GC — Spark's ContextCleaner only
+            # removes dead shuffle files when the driver GCs, which a
+            # mostly-idle driver heap never triggers on its own (files
+            # otherwise accumulate and slow later shuffle-heavy queries)
+            spark.catalog.clearCache()
+            spark.sparkContext._jvm.System.gc()
+        cold[name] = round(passes[0], 3)
+        timings[name] = round(min(passes[1:]), 3)
 
+    fv_per_sec = (round(n_queries / timings["northrule_features"], 1)
+                  if "northrule_features" in timings else None)
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline suite wall time (asof+window+dedup+ann+northrule)",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "queries_cold": cold,
         "sf": sf,
         "cpus": cpus,
         "feature_vectors_per_sec": fv_per_sec,
         "northrule_scale": scale,
         "northrule_queries": n_queries,
-        "northrule_cold_sec": northrule_cold_sec,
+        "northrule_cold_sec": cold.get("northrule_features"),
         "warmup_smoke_sec": cold_start_sec,
     }
     print(json.dumps(out))

@@ -17,6 +17,8 @@ is exactly the broadcast-probe pattern of knn_bruteforce.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 
@@ -98,6 +100,19 @@ def _table_bucket(t: int, num_planes: int):
             + F.col("__b")).alias("__tb")
 
 
+def _lsh_tables(df: DataFrame, vec_col: str, dim: int, cols: list, *,
+                num_planes: int, num_tables: int, seed: int) -> DataFrame:
+    """``cols`` of every row once per LSH table, keyed by the composite
+    ``__tb`` of :func:`_table_bucket`; table ``t`` hashes with its own
+    hyperplanes (``seed + 101 * t``). Rows sharing a ``__tb`` share a
+    bucket in some table."""
+    parts = [lsh_bucket(df, vec_col, dim, num_planes=num_planes,
+                        seed=seed + 101 * t, out="__b")
+             .select(*cols, _table_bucket(t, num_planes))
+             for t in range(num_tables)]
+    return reduce(DataFrame.unionByName, parts)
+
+
 def knn_lsh(
     probes: DataFrame, corpus: DataFrame, dim: int, *, id_col: str = "vec_id",
     vec_col: str = "embedding", k: int = 10, num_planes: int = 6,
@@ -108,19 +123,10 @@ def knn_lsh(
     top-k. Candidate shuffle is bounded by bucket occupancy — the IVF-style
     scale path."""
     def keyed(df, side):
-        parts = []
-        for t in range(num_tables):
-            b = lsh_bucket(df, vec_col, dim, num_planes=num_planes,
-                           seed=seed + 101 * t, out="__b")
-            parts.append(b.select(
-                F.col(id_col).alias(f"{side}_id"),
-                F.col(vec_col).alias(f"__{side}v"),
-                _table_bucket(t, num_planes),
-            ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _lsh_tables(
+            df, vec_col, dim, [F.col(id_col).alias(f"{side}_id"),
+                               F.col(vec_col).alias(f"__{side}v")],
+            num_planes=num_planes, num_tables=num_tables, seed=seed)
 
     pk = keyed(probes, "query")
     ck = keyed(corpus, "neighbor")
@@ -216,17 +222,9 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate (id_a < id_b, cosine >= threshold) pairs via LSH
     candidate generation + exact verification."""
-    parts = []
-    for t in range(num_tables):
-        b = lsh_bucket(df, vec_col, dim, num_planes=num_planes,
-                       seed=seed + 101 * t, out="__b")
-        parts.append(b.select(
-            id_col, F.col(vec_col).alias("__v"),
-            _table_bucket(t, num_planes),
-        ))
-    keyed = parts[0]
-    for p in parts[1:]:
-        keyed = keyed.unionByName(p)
+    keyed = _lsh_tables(df, vec_col, dim, [id_col, F.col(vec_col).alias("__v")],
+                        num_planes=num_planes, num_tables=num_tables,
+                        seed=seed)
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = a.join(
         b, (F.col("a.__tb") == F.col("b.__tb"))

@@ -38,6 +38,7 @@ def main() -> int:
     from dagli_spark.fixtures import materialize
     from dagli_spark.northrule import leakage_audit, run
     from dagli_spark.checkpoint import checkpointed_northrule
+    from dagli_spark.sources.readers import parquet_reader
 
     paths = materialize(spark, args.scale)
     opts = {}
@@ -53,7 +54,7 @@ def main() -> int:
     out.write.mode("overwrite").parquet(args.output)
 
     try:
-        audit = leakage_audit(spark.read.parquet(args.output))
+        audit = leakage_audit(parquet_reader(spark, args.output))
     except AssertionError as e:
         # emit the machine-readable verdict even on violation (the audit
         # raises; without this the job would die with a bare traceback)

@@ -297,6 +297,8 @@ DEDUP_PLAN_NODES = {
                              BroadcastExchange=3, ReusedExchange=6),
     "embedding_dedup": dict(FileScan=8, Generate=0, Exchange=1,
                             BroadcastExchange=1, ReusedExchange=0),
+    "knn_lsh": dict(FileScan=8, Generate=0, Exchange=2,
+                    BroadcastExchange=1, ReusedExchange=0),
 }
 
 
