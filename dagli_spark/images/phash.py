@@ -56,11 +56,6 @@ def phash64(arr: np.ndarray) -> int:
     return int(h.astype(np.int64))  # store as signed (Spark LongType)
 
 
-def phash_batch(images: list) -> np.ndarray:
-    """Vectorized-ish batch phash (decode done by caller)."""
-    return np.array([phash64(a) for a in images], dtype=np.int64)
-
-
 def phash64_stack(stack: np.ndarray | None = None, *,
                   gray3: np.ndarray | None = None) -> np.ndarray:
     """Batched phash over a (B, h, w, 3) uint8 stack of SAME-SHAPE images —

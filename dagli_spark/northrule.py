@@ -39,7 +39,11 @@ from dagli_spark.features.image_features import (
     with_decode_features,
 )
 from dagli_spark.operators import window_features as wf
-from dagli_spark.operators.asof import MATCHED_TIME, asof_join
+from dagli_spark.operators.asof import (
+    MATCHED_TIME,
+    _join_null_safe,
+    asof_join,
+)
 from dagli_spark.sources.readers import footer_rows, parquet_reader
 
 FEATURE_NAMES = [
@@ -64,6 +68,14 @@ def image_stats(events: DataFrame, images: DataFrame) -> DataFrame:
 
 _SESSION_GAP = "INTERVAL 30 MINUTES"
 _RANGE_LOOKBACK_S = 3600  # cnt_1h trailing window; also the carry horizon
+_TAIL_ROWS = 4  # label_avg5's frame: the deepest row lookback
+
+
+def _is_new(prev_t, t):
+    """1 where an event at ``t`` opens a session (no previous event time,
+    or more than ``_SESSION_GAP`` after ``prev_t``), else 0."""
+    return F.when(prev_t.isNull() | (t > prev_t + F.expr(_SESSION_GAP)), 1) \
+        .otherwise(0)
 
 
 def _window_block(df: DataFrame, pkeys: list[str]):
@@ -78,18 +90,14 @@ def _window_block(df: DataFrame, pkeys: list[str]):
     w = wf.spec(pkeys, ["event_time", "eseq"])
     epoch_s = F.floor(
         F.unix_micros(F.col("event_time").cast("timestamp")) / 1_000_000)
-    prev_t = F.lag("event_time").over(w)
     out = df.withColumns({
         "label_lag1": F.lag("label").over(w),
         "hamming_prev": F.coalesce(
             phash_hamming_col("phash", F.lag("phash").over(w)), F.lit(-1)
         ).cast("double"),
-        "label_avg5": F.avg("label").over(w.rowsBetween(-4, 0)),
+        "label_avg5": F.avg("label").over(w.rowsBetween(-_TAIL_ROWS, 0)),
         "epoch_s": epoch_s,
-        "__is_new": F.when(
-            prev_t.isNull()
-            | (F.col("event_time") > prev_t + F.expr(_SESSION_GAP)), 1
-        ).otherwise(0),
+        "__is_new": _is_new(F.lag("event_time").over(w), F.col("event_time")),
         "secs_since_prev": F.coalesce(
             (epoch_s - F.lag(epoch_s).over(w)).cast("double"), F.lit(-1.0)),
     })
@@ -114,146 +122,106 @@ def _plain_event_windows(ev: DataFrame) -> DataFrame:
     )
 
 
-def _hot_carry_rows(events: DataFrame, is_hot, width_us: int, *,
-                    last_n: int, with_horizon: bool) -> DataFrame:
-    """Carry-in rows for the bucketed window path: for every hot-entity
-    bucket, the last ``last_n`` rows GLOBALLY preceding the bucket's first
-    row, plus (``with_horizon``) everything inside the bucket's trailing
-    ``_RANGE_LOOKBACK_S`` horizon. Derived from the RAW events (narrow
-    pruned scan) — never from the image-joined frame, so the decode stage
-    is not re-evaluated per consumer.
+def _hot_carry_rows(events: DataFrame, is_hot, width_us: int) -> DataFrame:
+    """Carry-in rows for the bucketed window path: for every occupied
+    hot-entity bucket d, the part of the entity's history before d that
+    the window frames read — the last ``_TAIL_ROWS`` rows (lag-1, the
+    5-row mean) or every row inside d's trailing ``_RANGE_LOOKBACK_S``
+    horizon (the cnt_1h range frame), whichever is longer: a contiguous
+    suffix of that history. Derived from the RAW events (narrow pruned
+    scan) — never from the image-joined frame, so the decode stage is not
+    re-evaluated per consumer.
 
-    The tail must be TRANSITIVE: when the previous non-empty bucket holds
-    fewer than ``last_n`` rows, a rows(-last_n,0) frame in the destination
-    still reaches through it into earlier buckets (B0=5 rows, B1=1 row,
-    B2: B2's first frame needs B1's row AND B0's tail). A single-hop
-    "previous bucket's tail" silently under-fills such frames, so
-    destinations are resolved by GLOBAL row position instead: with
-    per-(entity, bucket) prefix counts, row r (global position ``rn``)
-    feeds bucket d iff ``rows_before(d) ∈ [rn, rn+last_n-1]`` — expressed
-    as ``last_n`` generated join keys so the broadcast lookup stays a hash
-    equi-join (one source row may feed SEVERAL thin destinations). Only a
-    bucket's own last ``last_n`` rows can ever qualify, so the explode is
-    bounded at ``last_n`` rows per occupied bucket.
+    The suffix is split by TIME into two disjoint routes, so every carried
+    row arrives once and nothing is deduplicated:
 
-    The horizon stays single-hop on the immediately previous occupied
-    bucket: ``width_us >= 2 * _RANGE_LOOKBACK_S`` means a destination's
-    horizon window lies entirely inside the bucket directly before it by
-    TIME, so any occupied earlier bucket either is that bucket or holds no
-    horizon rows. A row selected by both routes is deduplicated (frames
-    must see each carried row exactly once)."""
+    - recent rows, ``floor(us/1e6) >= start_s(d) - _RANGE_LOOKBACK_S``.
+      ``width_us >= _RANGE_LOOKBACK_S`` puts all of them in bucket d-1,
+      so each row goes to its own bucket + 1 when that bucket is occupied
+      (a broadcast equi-join);
+    - older rows among the last ``_TAIL_ROWS`` before d. This route is
+      TRANSITIVE: when the previous occupied bucket holds fewer than
+      ``_TAIL_ROWS`` rows, d's first frames reach through it into earlier
+      buckets (B0=5 rows, B1=1 row: B2's first frame needs B1's row AND
+      B0's tail). With per-(entity, bucket) prefix counts, the row at
+      global position ``rn`` feeds d iff ``rows_before(d) ∈ [rn,
+      rn+_TAIL_ROWS-1]``, expressed as ``_TAIL_ROWS`` generated join keys
+      so the broadcast lookup stays a hash equi-join (one row may feed
+      several thin destinations). Only a bucket's own last ``_TAIL_ROWS``
+      rows can qualify.
+
+    Null event times form a bucket of their own that sorts first, as they
+    do in the plain window; the prefix-count join is null-safe, so those
+    rows reach the later buckets too."""
     us = F.unix_micros(F.col("event_time").cast("timestamp"))
-    # __rid: per-(entity, bucket) positional surrogate computed ONCE on the
-    # source — the tail/horizon routes may select the same source ROW for
-    # the same destination, and the dedup below must collapse exactly that
-    # (route duplicates), never two genuinely identical source rows (two
-    # events equal in every column are two real rows; dropDuplicates() over
-    # data columns would silently undercount cnt_1h/label_avg5 for them)
-    # the ordering must be a TOTAL order up to fully-identical rows: the
-    # tail and horizon subtrees each re-evaluate this window after their
-    # own shuffles, so a tie on (event_time, eseq) with differing payload
-    # columns could get its row_numbers swapped BETWEEN the two routes and
-    # the route-key dedup below would then drop one payload and keep the
-    # other twice. Appending the remaining data columns as tiebreaks makes
-    # the assignment reproducible; fully-identical rows may still swap,
-    # which is observationally invisible.
-    # tiebreak columns restricted to ORDERABLE types (Spark's sense:
-    # everything except maps, recursively — binary and arrays/structs of
-    # orderables DO sort and DO disambiguate, so they stay in the key; a
-    # map column would make the window sort throw AnalysisException).
-    # Dropping an orderable payload column here would reintroduce the
-    # route-swap corruption this sort exists to prevent: two rows equal
-    # on every kept column but different in the dropped one could take
-    # swapped __rid values between the tail and horizon routes.
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    def _orderable(dt) -> bool:
-        if isinstance(dt, MapType):
-            return False
-        if isinstance(dt, ArrayType):
-            return _orderable(dt.elementType)
-        if isinstance(dt, StructType):
-            return all(_orderable(f.dataType) for f in dt.fields)
-        return True
-
-    tiebreaks = [F.col(f.name).desc() for f in events.schema.fields
-                 if f.name not in ("entity_id", "event_time", "eseq")
-                 and _orderable(f.dataType)]
-    w_desc = Window.partitionBy("entity_id", "__b").orderBy(
-        F.col("event_time").desc(), F.col("eseq").desc(), *tiebreaks)
-    e = (events.where(is_hot).withColumn("__b", F.floor(us / width_us))
-         .withColumn("__rid", F.row_number().over(w_desc)))
+    e = events.where(is_hot).withColumn("__b", F.floor(us / width_us))
     # per-(entity, bucket) prefix counts — dictionary-sized (occupied
     # buckets only), window runs over the aggregated frame, not events
     ct = e.groupBy("entity_id", "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_ent = Window.partitionBy("entity_id").orderBy("__b")
-    ct = (ct.withColumn("__thru", F.sum("__cnt").over(w_ent))
-            .withColumn("__before", F.col("__thru") - F.col("__cnt")))
+    ct = ct.withColumn("__thru", F.sum("__cnt").over(
+        Window.partitionBy("entity_id").orderBy("__b")))
     dsts = ct.select("entity_id", F.col("__b").alias("__dst"),
-                     F.col("__before").alias("__k"))
-    tails = (
-        e.where(F.col("__rid") <= last_n)
-        .join(F.broadcast(ct.select("entity_id", "__b", "__thru")),
-              ["entity_id", "__b"])
-        .withColumn("__rn", F.col("__thru") - F.col("__rid") + 1)
-        .withColumn("__k", F.explode(F.array(
-            *[F.col("__rn") + j for j in range(last_n)])))
-        .join(F.broadcast(dsts), ["entity_id", "__k"])
-        .where(F.col("__dst") > F.col("__b"))
-        .drop("__thru", "__rn", "__k")
+                     (F.col("__thru") - F.col("__cnt")).alias("__k"))
+    recent = F.floor(us / 1_000_000) >= (
+        F.col("__dst") * (width_us // 1_000_000) - _RANGE_LOOKBACK_S)
+    horizon = (
+        e.withColumn("__dst", F.col("__b") + 1).where(recent)
+        .join(F.broadcast(dsts.drop("__k")), ["entity_id", "__dst"])
     )
-    carried = tails
-    if with_horizon:
-        carry_map = (
-            ct.withColumn("__src", F.lag("__b").over(w_ent))
-            .where(F.col("__src").isNotNull())
-            .select("entity_id", F.col("__src").alias("__b"),
-                    F.col("__b").alias("__dst"))
-        )
-        dst_start_s = (F.col("__dst") * width_us / 1_000_000).cast("long")
-        horizon = (
-            e.join(F.broadcast(carry_map), ["entity_id", "__b"])
-            .where(F.floor(us / 1_000_000) >= dst_start_s - _RANGE_LOOKBACK_S)
-        )
-        # dedupe on the ROUTE key (source row identity x destination), not
-        # the data columns: a row picked by both routes appears once per
-        # destination; identical source rows keep their multiplicity
-        carried = carried.unionByName(horizon).dropDuplicates(
-            ["entity_id", "__b", "__rid", "__dst"])
+    w_desc = Window.partitionBy("entity_id", "__b").orderBy(
+        F.col("event_time").desc(), F.col("eseq").desc())
+    last = e.withColumn("__rid", F.row_number().over(w_desc)) \
+        .where(F.col("__rid") <= _TAIL_ROWS)
+    tails = (
+        _join_null_safe(last, F.broadcast(ct.drop("__cnt")),
+                        ["entity_id", "__b"], "__ct_", "inner")
+        .withColumn("__k", F.explode(F.array(
+            *[F.col("__thru") - F.col("__rid") + 1 + j
+              for j in range(_TAIL_ROWS)])))
+        .join(F.broadcast(dsts), ["entity_id", "__k"])
+        # the older rows only (null times are the oldest): the horizon
+        # route carries the recent ones
+        .where(F.col("event_time").isNull() | ~recent)
+        .drop("__rid", "__thru", "__k")
+    )
     return (
-        carried.drop("__b", "__rid").withColumnRenamed("__dst", "__b")
-        .withColumn("__carry", F.lit(True))
+        tails.unionByName(horizon).drop("__b")
+        .withColumnRenamed("__dst", "__b").withColumn("__carry", F.lit(True))
     )
 
 
 def _session_offsets(events: DataFrame, is_hot, width_us: int) -> DataFrame:
     """Per-(hot entity, bucket) EXCLUSIVE running session-start counts —
-    the cross-bucket stitch for the session-id cumulative sum. Computed on
-    a narrow pruned scan of the raw events (entity/time/eseq only): using
-    the image-joined window output here would re-evaluate the decode stage
-    for a tiny aggregate. Carry = last 1 row (is_new needs only lag-1)."""
+    the cross-bucket stitch for the session-id cumulative sum. Computed
+    without carry rows on a narrow pruned scan of the raw events
+    (entity/time/eseq only): using the image-joined window output here
+    would re-evaluate the decode stage for a tiny aggregate.
+
+    An in-bucket lag counts every bucket's first row as a start; the true
+    flag of that row compares it with the last time of the previous
+    occupied bucket, so a bucket opens ``starts - 1 + is_new(previous
+    max, own min)`` sessions. The null-time bucket sorts first, as null
+    times do in the plain window."""
     us = F.unix_micros(F.col("event_time").cast("timestamp"))
-    slim = events.select("entity_id", "event_time", "eseq").where(is_hot)
-    own = slim.withColumn("__b", F.floor(us / width_us)) \
-        .withColumn("__carry", F.lit(False))
-    carry = _hot_carry_rows(slim, F.lit(True), width_us,
-                            last_n=1, with_horizon=False)
-    u = own.unionByName(carry.select(*own.columns))
     w = wf.spec(["entity_id", "__b"], ["event_time", "eseq"])
-    prev_t = F.lag("event_time").over(w)
-    is_new = F.when(prev_t.isNull()
-                    | (F.col("event_time") > prev_t + F.expr(_SESSION_GAP)), 1) \
-        .otherwise(0)
-    starts = (
-        u.withColumn("__is_new", is_new)
-        .where(~F.col("__carry"))
-        .groupBy("entity_id", "__b").agg(F.sum("__is_new").alias("__starts"))
+    per_bucket = (
+        events.select("entity_id", "event_time", "eseq").where(is_hot)
+        .withColumn("__b", F.floor(us / width_us))
+        .withColumn("__is_new",
+                    _is_new(F.lag("event_time").over(w), F.col("event_time")))
+        .groupBy("entity_id", "__b")
+        .agg(F.sum("__is_new").alias("__starts"),
+             F.min("event_time").alias("__mn"),
+             F.max("event_time").alias("__mx"))
     )
-    w_off = (Window.partitionBy("entity_id").orderBy("__b")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    return starts.withColumn(
-        "__off", F.coalesce(F.sum("__starts").over(w_off), F.lit(0))
-    ).select("entity_id", "__b", "__off")
+    w_ent = Window.partitionBy("entity_id").orderBy("__b")
+    starts = per_bucket.withColumn(
+        "__starts", F.col("__starts") - 1
+        + _is_new(F.lag("__mx").over(w_ent), F.col("__mn")))
+    before = w_ent.rowsBetween(Window.unboundedPreceding, -1)
+    return starts.select(
+        "entity_id", "__b",
+        F.coalesce(F.sum("__starts").over(before), F.lit(0)).alias("__off"))
 
 
 def _bucketed_event_windows(events: DataFrame, dim: DataFrame,
@@ -268,27 +236,27 @@ def _bucketed_event_windows(events: DataFrame, dim: DataFrame,
     entities make the window stage a measured 7x straggler tail. Here
     EVERY entity goes through ONE window pass partitioned by
     (entity, __b): cold entities get the constant bucket 0 (bit-identical
-    work to the plain path), hot entities split into time buckets with
-    carry-in tails (last 4 rows for lag1/5-row rolling + the trailing
-    ``_RANGE_LOOKBACK_S`` seconds for the cnt_1h range frame, which also
-    covers the 30-min session gap), so every bounded-lookback feature
-    reproduces the global window EXACTLY. The one unbounded feature — the
-    session-id cumulative sum — stitches across buckets via broadcast
-    per-bucket offsets (:func:`_session_offsets`). The fat image/decode
-    dimension is joined exactly ONCE, after the carry union: carry rows
-    and offsets derive from narrow scans of the raw events.
+    work to the plain path), hot entities split into time buckets, each
+    preceded by its carry-in rows (:func:`_hot_carry_rows`: the suffix of
+    the entity's earlier history that the lag-1, 5-row and 1h range frames
+    read, which also covers the 30-min session gap), so every
+    bounded-lookback feature reproduces the global window EXACTLY. The
+    one unbounded feature — the session-id cumulative sum — stitches
+    across buckets via broadcast per-bucket offsets
+    (:func:`_session_offsets`). The fat image/decode dimension is joined
+    exactly ONCE, after the carry union: carry rows and offsets derive
+    from narrow scans of the raw events.
 
-    ``width_us`` must be a whole-second multiple >= 2x the range lookback
-    so cross-bucket range frames never reach past one carry hop."""
+    ``width_us`` must be a whole number of seconds and at least the range
+    lookback, so a bucket's horizon lies inside the bucket before it."""
     assert (width_us % 1_000_000 == 0
-            and width_us >= 2 * _RANGE_LOOKBACK_S * 1_000_000)
+            and width_us >= _RANGE_LOOKBACK_S * 1_000_000)
     is_hot = F.col("entity_id").isin(hot_ids)
     us = F.unix_micros(F.col("event_time").cast("timestamp"))
     own = events.withColumn(
         "__b", F.when(is_hot, F.floor(us / width_us)).otherwise(F.lit(0))
     ).withColumn("__carry", F.lit(False))
-    carry = _hot_carry_rows(events, is_hot, width_us,
-                            last_n=4, with_horizon=True)
+    carry = _hot_carry_rows(events, is_hot, width_us)
     u = own.unionByName(carry.select(*own.columns))
     ev = u.join(dim, "image_id", "left")  # the ONE image/decode join
 
@@ -301,6 +269,8 @@ def _bucketed_event_windows(events: DataFrame, dim: DataFrame,
                      range_=(-_RANGE_LOOKBACK_S, 0))
     out = out.where(~F.col("__carry"))
     offsets = _session_offsets(events, is_hot, width_us)
+    # cold entities and the null-time bucket (it sorts first) match no
+    # offset row and start from 0
     out = out.join(F.broadcast(offsets), ["entity_id", "__b"], "left")
     out = out.withColumn(
         "session_id",
@@ -363,12 +333,14 @@ def event_features(events: DataFrame, images: DataFrame,
     — identical results, no single-task-per-entity straggler. The bucket
     width targets ~``hot_target_rows`` rows per (entity, bucket) task.
 
-    Threshold calibration (measured, scale tier, local[32]): a 120k-row
-    entity's window task is only ~0.7 s (sort+6 window exprs are cheap),
-    while the bucketing machinery — the detection aggregate plus two
-    narrow carry/offset scans — costs ~2-3 s, so bucketing a 120k-row
-    entity is a net LOSS locally; the crossover is around several 10^5
-    rows per entity. At 10^12-row scale a hot entity owning even 0.1% of
+    Threshold calibration (history: scale tier on a 32-CPU VM, local[32],
+    with an earlier carry that took two row routes plus a second carry
+    for the session stitch; not re-measured since): a 120k-row entity's
+    window task was only ~0.7 s (sort+6 window exprs are cheap), while the
+    bucketing machinery — the detection aggregate plus the narrow carry
+    scan and the per-bucket session aggregate — cost ~2-3 s, so bucketing
+    a 120k-row entity was a net LOSS locally; the crossover was around
+    several 10^5 rows per entity. At 10^12-row scale a hot entity owning even 0.1% of
     events is ~10^9 rows in ONE task — hours — so the default fires long
     before that; set it to match your cluster's per-task comfort zone.
 

@@ -88,11 +88,19 @@ def _event_state(right_time, values, tiebreak):
     return state, tie
 
 
-def _and_all(conds: list[Column]) -> Column:
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
+def _join_null_safe(left: DataFrame, right: DataFrame, keys: list[str],
+                    prefix: str, how: str = "left") -> DataFrame:
+    """``left`` joined to ``right`` on NULL-SAFE equality of ``keys``: the
+    window paths group null keys (and null-time buckets) into one
+    partition, and an equi-join would strand their rows. ``right``'s keys
+    are renamed ``{prefix}{i}`` for the join and dropped after it."""
+    names = [f"{prefix}{i}" for i in range(len(keys))]
+    r = right.select(*[F.col(k).alias(n) for k, n in zip(keys, names)],
+                     *[c for c in right.columns if c not in keys])
+    cond = F.col(keys[0]).eqNullSafe(F.col(names[0]))
+    for k, n in zip(keys[1:], names[1:]):
+        cond = cond & F.col(k).eqNullSafe(F.col(n))
+    return left.join(r, cond, how).drop(*names)
 
 
 def asof_join(
@@ -256,19 +264,10 @@ def _asof_join_bucketed(
     buckets = (
         ev.select(*keys, _B).unionByName(qr.select(*keys, _B)).distinct()
     )
-    # null-safe equality here too: distinct() groups null keys, and the
-    # window below treats them as one partition — an equi-join would strand
-    # their bucket states
-    bl = bucket_last.select(
-        *[F.col(k).alias(f"__bl_{i}") for i, k in enumerate(keys + [_B])],
-        _STATE,
-    )
-    bl_cond = _and_all([
-        F.col(k).eqNullSafe(F.col(f"__bl_{i}"))
-        for i, k in enumerate(keys + [_B])
-    ])
+    # null-safe: distinct() groups null keys, and the window below treats
+    # them as one partition
     carry = (
-        buckets.join(bl, bl_cond, "left")
+        _join_null_safe(buckets, bucket_last, keys + [_B], "__bl_")
         .withColumn("__carry", F.last(_STATE, ignorenulls=True).over(w))
         .select(*keys, _B, "__carry")
     )
@@ -279,24 +278,14 @@ def _asof_join_bucketed(
     ev_side, qr_side = _sides(qr, ev, keys + [_B], left_time, right_time, values, tiebreak)
     merged = ev_side.unionByName(qr_side, allowMissingColumns=True)
     scanned = _locf_scan(merged, keys + [_B], strict)
-    # null-SAFE key equality: the window paths group null entity keys (and
-    # null-time buckets) together, so the carry join must match them too —
-    # a plain equi-join would silently drop carry-in for null keys and make
-    # the bucketed path diverge from the single-pass path
-    carry_cols = keys + [_B]
-    c = carry.select(
-        *[F.col(k).alias(f"__c_{i}") for i, k in enumerate(carry_cols)],
-        "__carry",
-    )
-    cond = _and_all([
-        F.col(k).eqNullSafe(F.col(f"__c_{i}"))
-        for i, k in enumerate(carry_cols)
-    ])
+    # null-safe: an equi-join would drop carry-in for null keys and
+    # null-time buckets, and the bucketed path would diverge from the
+    # single-pass path
     scanned = (
-        scanned.where(F.col(_SIDE) == 1)
-        .join(c, cond, "left")
+        _join_null_safe(scanned.where(F.col(_SIDE) == 1), carry,
+                        keys + [_B], "__c_")
         .withColumn(_STATE, F.coalesce(F.col(_STATE), F.col("__carry")))
-        .drop("__carry", *[f"__c_{i}" for i in range(len(carry_cols))])
+        .drop("__carry")
     )
     return _finish(scanned, out_cols, values, left_time, tolerance, keep_matched_time)
 
@@ -357,13 +346,7 @@ def asof_join_broadcast(
 
     packed = events.groupBy(*keys).agg(
         F.array_sort(F.collect_list(entry), order_cmp).alias("__hist"))
-    # null-SAFE key join: the window path partitions null keys together
-    p = packed.select(
-        *[F.col(k).alias(f"__pk_{i}") for i, k in enumerate(keys)], "__hist")
-    cond = _and_all([
-        F.col(k).eqNullSafe(F.col(f"__pk_{i}")) for i, k in enumerate(keys)])
-    j = queries.join(F.broadcast(p), cond, "left") \
-        .drop(*[f"__pk_{i}" for i in range(len(keys))])
+    j = _join_null_safe(queries, F.broadcast(packed), keys, "__pk_")
 
     # Visibility mirrors the union path's sort: a null event time sorts
     # before every time (visible at minus-infinity), and a null QUERY time

@@ -28,14 +28,6 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"\n\s*[^(]*\(\d+\) Exchange\b", plan))
 
 
-def count_broadcasts(df: DataFrame) -> int:
-    """Broadcast exchanges, counted the same way as count_exchanges (the
-    detail-section headers only — a bare substring count would also match
-    each node's tree line and report double)."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"\n\s*[^(]*\(\d+\) BroadcastExchange\b", plan))
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries of every parquet scan in the plan."""
     plan = formatted_plan(df)

@@ -188,10 +188,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_all() -> None:
-    """Stop the active session if any (used between parallelism-grid tests)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

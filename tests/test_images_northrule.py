@@ -430,8 +430,10 @@ def test_bucketed_windows_thin_buckets_transitive_carry(spark):
     buckets — the original single-hop carry (last 4 rows of the previous
     non-empty bucket only) under-filled such frames and label_avg5
     silently depended on the hot threshold. Cases: the review's 5-1-3
-    repro, a 4-deep chain of 1-row buckets, an empty bucket gap, and
-    boundary-adjacent rows exercising the tail/horizon overlap dedupe."""
+    repro, a 4-deep chain of 1-row buckets, an empty bucket gap,
+    boundary-adjacent rows where the tail and horizon routes meet, and
+    null event times (their bucket sorts first and must reach the later
+    buckets, as null times do in the plain window)."""
     import datetime as dt
 
     from pyspark.sql import types as T
@@ -457,11 +459,12 @@ def test_bucketed_windows_thin_buckets_transitive_carry(spark):
         "2-1-1-1-2": [100, 200, 7300, 14500, 21700, 28900, 29000],
         "5-gap-3": [100, 200, 300, 400, 500, 14500, 14600, 14700],
         "horizon-overlap": [7000, 7100, 7190, 7300, 14350, 14390, 14500],
+        "null-times": [None, None, 100, 8000],
     }
     base = dt.datetime(2026, 1, 1)
     for name, ts in cases.items():
-        rows = [("E", base + dt.timedelta(seconds=s), i,
-                 f"img{i % 3}", float(i + 1)) for i, s in enumerate(ts)]
+        rows = [("E", None if s is None else base + dt.timedelta(seconds=s),
+                 i, f"img{i % 3}", float(i + 1)) for i, s in enumerate(ts)]
         ev = spark.createDataFrame(rows, schema)
         plain = _plain_event_windows(ev.join(dim, "image_id", "left"))
         buck = _bucketed_event_windows(ev, dim, ["E"], width_us)
@@ -471,14 +474,70 @@ def test_bucketed_windows_thin_buckets_transitive_carry(spark):
         assert a == b, f"{name}: bucketed diverges from plain"
 
 
+def test_bucketed_windows_match_plain_seeded_layouts(spark):
+    """The bucketed path equals the plain window on 12 seeded layouts of
+    2 hot entities each (1-40 events; 15% null times in the odd seeds;
+    rows on the 1h horizon boundary and on bucket edges; thin and empty
+    buckets), at the smallest legal bucket width and at twice it. All
+    layouts share one frame, one entity pair per seed."""
+    import datetime as dt
+    import random
+
+    from pyspark.sql import types as T
+
+    from dagli_spark.northrule import (
+        _bucketed_event_windows,
+        _plain_event_windows,
+    )
+
+    schema = T.StructType([
+        T.StructField("entity_id", T.StringType()),
+        T.StructField("event_time", T.TimestampNTZType()),
+        T.StructField("eseq", T.LongType()),
+        T.StructField("image_id", T.StringType()),
+        T.StructField("label", T.DoubleType()),
+    ])
+    dim = spark.createDataFrame(
+        [(f"img{i}", i * 1234567) for i in range(5)],
+        ["image_id", "phash"])
+    base = dt.datetime(2026, 1, 1)
+    rows = []
+    for seed in range(12):
+        rng = random.Random(seed)
+        for ent in (f"s{seed}a", f"s{seed}b"):
+            n_buckets = rng.choice([2, 6, 12])  # of 7,200 s
+            for i in range(rng.randint(1, 40)):
+                b = rng.randrange(n_buckets)
+                kind = rng.random()
+                if seed % 2 and kind < 0.15:
+                    t = None
+                elif kind < 0.4:  # the next bucket's horizon boundary
+                    t = b * 7200 + 3600 + rng.choice([-1, 0, 1])
+                elif kind < 0.55:  # a bucket edge
+                    t = b * 7200 + rng.choice([-1, 0])
+                else:
+                    t = b * 7200 + rng.randrange(7200)
+                rows.append((ent, None if t is None else
+                             base + dt.timedelta(seconds=max(t, 0)), i,
+                             f"img{rng.randrange(5)}", float(rng.randrange(9))))
+    ev = spark.createDataFrame(rows, schema)
+    hot = sorted({r[0] for r in rows})
+    plain = _plain_event_windows(ev.join(dim, "image_id", "left"))
+    cols = sorted(plain.columns)
+    a = sorted(str(r) for r in plain.select(*cols).collect())
+    for width_s in (3600, 7200):
+        buck = _bucketed_event_windows(ev, dim, hot, width_s * 1_000_000)
+        b = sorted(str(r) for r in buck.select(*cols).collect())
+        assert a == b, f"width {width_s} s: bucketed diverges from plain"
+
+
 def test_bucketed_windows_duplicate_source_rows_survive(spark):
-    """Two source rows identical in EVERY column are two real events. The
-    carry union dedupes on the ROUTE key (source row position x
-    destination), so a row selected by both the tail and horizon routes
-    appears exactly once per destination while genuine duplicates keep
-    their multiplicity — a dropDuplicates() over data columns collapsed
-    them and undercounted cnt_1h/label_avg5 in the bucketed path
-    (round-3 advice)."""
+    """Two source rows identical in EVERY column are two real events and
+    must both be carried: the carry's two routes are disjoint by time, so
+    nothing is deduplicated, and genuine duplicates keep their
+    multiplicity — a dropDuplicates() over data columns collapsed them and
+    undercounted cnt_1h/label_avg5 in the bucketed path (round-3
+    advice)."""
     import datetime as dt
 
     from pyspark.sql import types as T
@@ -526,12 +585,11 @@ def test_bucketed_windows_duplicate_source_rows_survive(spark):
 
 
 def test_bucketed_windows_tolerate_non_orderable_payload(spark):
-    """Round-4 advice: the carry path's reproducibility tiebreaks must
-    skip non-orderable payload columns — a map-typed column in events
-    made the per-bucket window sort throw AnalysisException (and a fat
-    binary payload was dragged into the sort key). Such columns only
-    widen the fully-identical-rows-may-swap class; results must still
-    match the plain path."""
+    """Round-4 advice: map and binary payload columns ride through the
+    carry untouched — a map-typed column in a carry sort key made the
+    per-bucket window sort throw AnalysisException (and a fat binary
+    payload was dragged into the sort key). Results must match the plain
+    path."""
     import datetime as dt
 
     from pyspark.sql import types as T

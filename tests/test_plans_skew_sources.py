@@ -302,15 +302,15 @@ DEDUP_PLAN_NODES = {
 }
 
 
-def _final_plan_nodes(plan: str) -> dict:
-    """Operator counts of the final section of an AQE plan string (the
+def _final_plan_nodes(plan: str, nodes) -> dict:
+    """Counts of ``nodes`` in the final section of an AQE plan string (the
     string also prints the initial plan, which would count nodes twice)."""
     final = plan.split("== Initial Plan ==")[0]
     # the operator that opens a tree line, after its codegen stage id: a
     # ReusedExchange line also names the exchange it reuses
     return {node: len(re.findall(rf"^[\s:|+-]*(?:\*\(\d+\) )?{node}\b",
                                  final, re.M))
-            for node in DEDUP_PLAN_NODES["simhash_pairs"]}
+            for node in nodes}
 
 
 @pytest.mark.parametrize("name", sorted(DEDUP_PLAN_NODES))
@@ -320,7 +320,26 @@ def test_dedup_final_plan_shape(spark, sf01_dir, name):
     import __spark_entry__ as entrymod
 
     df = entrymod.queries()[name](spark, sf01_dir)
-    assert _final_plan_nodes(final_adaptive_plan(df)) == DEDUP_PLAN_NODES[name]
+    want = DEDUP_PLAN_NODES[name]
+    assert _final_plan_nodes(final_adaptive_plan(df), want) == want
+
+
+# The forced hot-entity window path on the smoke tier (every fixture hot
+# entity time-bucketed). A second carry route, a dedup of the carry or a
+# carry inside the session-id stitch shows up as extra Sorts, Windows,
+# Exchanges or Generates.
+HOT_PATH_NODES = dict(Sort=8, Window=9, Exchange=9, BroadcastExchange=5,
+                      Generate=1)
+
+
+def test_hot_path_final_plan_shape(spark):
+    paths = materialize(spark, "smoke")
+    ev = spark.read.parquet(paths["image_events"])
+    im = spark.read.parquet(paths["images"])
+    df = event_features(ev, im, with_pixels=False, hot_min_rows=100,
+                        hot_target_rows=20)
+    got = _final_plan_nodes(final_adaptive_plan(df), HOT_PATH_NODES)
+    assert got == HOT_PATH_NODES
 
 
 def test_iceberg_catalog_real_table(spark, sf_dir, tmp_path):
