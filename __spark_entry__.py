@@ -1707,18 +1707,13 @@ def _jaccard_dedup_oracle() -> str:
     """
 
 
-def _embedding_dedup_oracle() -> str:
-    """embedding_dedup is NOT hash-family-bound: the hyperplanes come from
-    the pure splitmix generator (similarity._hyperplanes), so bucketing,
-    candidate join and the exact-cosine threshold verify replay in SQL
-    with the plane vectors inlined (q_embedding_dedup params: dim=64,
-    num_planes=8, num_tables=4, seed=17, threshold=0.35). Both decisions
-    sit clear of float noise at sf0.01: the nearest candidate cosine is
-    7e-5 off the cut, and the smallest |embedding . plane| behind a
-    bucket-sign bit is 4.77e-5 (pinned by tests/test_oracle_margins.py)."""
+def _lsh_keyed_sql(num_planes: int, num_tables: int, seed: int) -> str:
+    """(vec_id, embedding, tb) of every 64-d embedding once per LSH table,
+    ``tb`` = table * 2^num_planes + the table's hyperplane sign bucket
+    (similarity._hyperplanes with seed + 101 * table; each dot product
+    summed in index order, like the engine's aggregate)."""
     from dagli_spark.operators.similarity import _hyperplanes
 
-    num_planes, num_tables, seed = 8, 4, 17
     sides = []
     for t in range(num_tables):
         planes = _hyperplanes(64, num_planes, seed + 101 * t)
@@ -1732,7 +1727,19 @@ def _embedding_dedup_oracle() -> str:
         sides.append(
             f"SELECT vec_id, embedding, "
             f"{t} * {1 << num_planes} + ({bucket}) AS tb FROM embeddings")
-    keyed = " UNION ALL ".join(sides)
+    return " UNION ALL ".join(sides)
+
+
+def _embedding_dedup_oracle() -> str:
+    """embedding_dedup is NOT hash-family-bound: the hyperplanes come from
+    the pure splitmix generator (similarity._hyperplanes), so bucketing,
+    candidate join and the exact-cosine threshold verify replay in SQL
+    with the plane vectors inlined (q_embedding_dedup params: dim=64,
+    num_planes=8, num_tables=4, seed=17, threshold=0.35). Both decisions
+    sit clear of float noise at sf0.01: the nearest candidate cosine is
+    7e-5 off the cut, and the smallest |embedding . plane| behind a
+    bucket-sign bit is 4.77e-5 (pinned by tests/test_oracle_margins.py)."""
+    keyed = _lsh_keyed_sql(num_planes=8, num_tables=4, seed=17)
     return f"""
         WITH keyed AS ({keyed}),
              cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1804,23 +1811,7 @@ def _knn_lsh_oracle() -> str:
     so bucketing, candidate join and cosine top-k replay exactly in SQL
     with the plane vectors inlined (q_knn_lsh params: dim=64, k=3,
     num_planes=6, num_tables=4, seed=13)."""
-    from dagli_spark.operators.similarity import _hyperplanes
-
-    num_planes, num_tables, seed = 6, 4, 13
-    sides = []
-    for t in range(num_tables):
-        planes = _hyperplanes(64, num_planes, seed + 101 * t)
-        bits = []
-        for p_i, plane in enumerate(planes):
-            lit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-            dot = (f"list_sum(list_transform(range(1, 65), i -> "
-                   f"CAST(embedding[i] AS DOUBLE) * ({lit})[i]))")
-            bits.append(f"(CASE WHEN {dot} >= 0 THEN {1 << p_i} ELSE 0 END)")
-        bucket = " + ".join(bits)
-        sides.append(
-            f"SELECT vec_id, embedding, "
-            f"{t} * {1 << num_planes} + ({bucket}) AS tb FROM embeddings")
-    keyed = " UNION ALL ".join(sides)
+    keyed = _lsh_keyed_sql(num_planes=6, num_tables=4, seed=13)
     return f"""
         WITH keyed AS ({keyed}),
              pk AS (SELECT * FROM keyed WHERE vec_id < 10),

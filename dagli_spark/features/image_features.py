@@ -255,8 +255,3 @@ def phash_embedding_col(phash_col: str = "phash") -> F.Column:
         f"as float))"
     ).cast(ArrayType(FloatType()))
 
-
-def phash_hamming_col(a: str, b) -> F.Column:
-    """Hamming distance between two phash columns (JVM bit_count)."""
-    bc = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(F.col(a).bitwiseXOR(bc))

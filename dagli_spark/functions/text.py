@@ -780,8 +780,12 @@ def quality_score(col) -> Column:
     return (len_score * punct_score * digit_score).alias("quality")
 
 
+def normalized_text(col) -> Column:
+    """The lower-cased whitespace tokens joined by single spaces."""
+    return F.array_join(tokens(F.lower(_c(col))), " ")
+
+
 def fingerprint(col, *, seed: int = 0) -> Column:
     """64-bit document fingerprint: xxhash64 of the normalized token stream
     (rolling-hash analogue; exact-dedup key)."""
-    toks = tokens(F.lower(_c(col)))
-    return F.xxhash64(F.lit(seed), F.array_join(toks, " "))
+    return F.xxhash64(F.lit(seed), normalized_text(col))

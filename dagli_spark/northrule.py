@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from dagli_spark.features.image_features import (
     phash_embedding_col,
-    phash_hamming_col,
     with_decode_features,
 )
 from dagli_spark.operators import window_features as wf
@@ -44,6 +43,7 @@ from dagli_spark.operators.asof import (
     _join_null_safe,
     asof_join,
 )
+from dagli_spark.operators.dedup import hamming64
 from dagli_spark.sources.readers import footer_rows, parquet_reader
 
 FEATURE_NAMES = [
@@ -93,7 +93,7 @@ def _window_block(df: DataFrame, pkeys: list[str]):
     out = df.withColumns({
         "label_lag1": F.lag("label").over(w),
         "hamming_prev": F.coalesce(
-            phash_hamming_col("phash", F.lag("phash").over(w)), F.lit(-1)
+            hamming64("phash", F.lag("phash").over(w)), F.lit(-1)
         ).cast("double"),
         "label_avg5": F.avg("label").over(w.rowsBetween(-_TAIL_ROWS, 0)),
         "epoch_s": epoch_s,

@@ -7,17 +7,23 @@ never the full cross product —
 - MinHash+LSH: shingles -> P minhashes -> B bands; rows sharing a band
   bucket hash are candidates (self-join per band key), candidate pairs are
   then verified with true Jaccard. Shuffle = rows x B band keys.
-- SimHash: 64-bit rotation-banded buckets with Hamming verification.
+- SimHash: 64-bit pigeonhole-blocked buckets with Hamming verification.
 - n-gram Jaccard: token-prefix blocking + exact Jaccard on candidates.
 - embedding cosine: see dagli_spark.operators.similarity (LSH-bucketed).
+
+Every banded generator (minhash bands, simhash blocks, the LSH tables of
+similarity.py) goes through one path: :func:`band_keys` explodes the row's
+``long`` band keys in one projection, :func:`band_pairs` joins ids only on
+them, and :func:`with_payload` attaches what the verify step reads to the
+candidate ids alone.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dagli_spark.functions.text import fingerprint, tokens, word_ngrams
+from dagli_spark.functions.text import normalized_text, tokens, word_ngrams
 
 # Wide expressions: a loop-generated family of expressions (simhash's lanes
 # and bit recombine, minhash's salted mins and band keys) is built as one
@@ -38,15 +44,20 @@ def exact_dedup(
     # being exact around billions of docs (64-bit birthday collisions would
     # silently delete distinct documents); a combined 128 bits keeps the
     # shuffle key fixed-width while making collisions (~2^-128) negligible.
+    # Normalized: the text fingerprint() hashes, bound once per row and
+    # hashed with both seeds (two fingerprint() calls tokenize twice: their
+    # filter lambdas differ, so CSE cannot merge them).
     if normalized:
-        k1, k2 = fingerprint(text_col), fingerprint(text_col, seed=0x9E3779B9)
+        df = df.withColumn("__norm", normalized_text(text_col))
+        c, k1 = F.col("__norm"), F.xxhash64(F.lit(0), F.col("__norm"))
     else:
         c = F.col(text_col)
-        k1, k2 = F.xxhash64(c), F.xxhash64(F.lit(0x9E3779B9), c)
-    w = df.withColumn("__fp1", k1).withColumn("__fp2", k2)
+        k1 = F.xxhash64(c)
+    w = df.withColumns({"__fp1": k1,
+                        "__fp2": F.xxhash64(F.lit(0x9E3779B9), c)})
     keep = w.groupBy("__fp1", "__fp2").agg(F.min(id_col).alias(id_col))
     return w.join(keep, ["__fp1", "__fp2", id_col], "left_semi") \
-        .drop("__fp1", "__fp2")
+        .drop("__fp1", "__fp2", "__norm")
 
 
 _POLY_M = 2147483647  # 2^31 - 1: products with 31-bit operands fit a long
@@ -136,7 +147,7 @@ def minhash_lsh_pairs(
                             num_hashes=num_hashes, seed=seed,
                             hash_method=hash_method)
 
-    band_keys = []
+    band_keys_sql = []
     for b in range(bands):
         cols = [f"mh_{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
         if hash_method == "poly31":
@@ -146,27 +157,12 @@ def minhash_lsh_pairs(
             k = f"CAST({b + 1} AS BIGINT)"
             for c in cols:
                 k = f"pmod({k} * 31 + {c} + 1, {_POLY_M})"
-            band_keys.append(k)
+            band_keys_sql.append(k)
         else:
-            band_keys.append(f"xxhash64({b}, {', '.join(cols)})")
-    # one row per (doc, band), ids ONLY — the shingle arrays never ride
-    # through the self-join shuffle or the pair dedup (they are joined back
-    # exactly once per verified candidate); shuffle = |docs| x bands 8-byte
-    # keys, never |docs|^2 payloads.
-    banded = sig.select(
-        id_col, F.expr(f"explode(array({', '.join(band_keys)})) AS __band")
-    )
-    a = banded.alias("a")
-    b_ = banded.alias("b")
-    cand = (
-        a.join(b_, (F.col("a.__band") == F.col("b.__band"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+            band_keys_sql.append(f"xxhash64({b}, {', '.join(cols)})")
+    # ids ONLY through the self-join: the shingle arrays are joined back
+    # exactly once per verified candidate (with_payload below)
+    cand = band_pairs(band_keys(sig, band_keys_sql, id_col), id_col)
     # Verify only candidate docs: without the semi-filter the shingle arrays
     # are built for EVERY doc twice (once per join side) — at 100 TB that is
     # two extra full-corpus passes to verify a tiny candidate set. cand
@@ -182,12 +178,8 @@ def minhash_lsh_pairs(
            .union(cand.select(F.col("id_b").alias(id_col))).distinct())
     needed = df.join(ids, id_col, "left_semi")
     sh = needed.select(F.col(id_col), shingles.alias("__sh"))
-    cand = (
-        cand.join(sh.select(F.col(id_col).alias("id_a"),
-                            F.col("__sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
-                        F.col("__sh").alias("sh_b")), "id_b")
-    )
+    cand = with_payload(with_payload(cand, sh, id_col, "__sh", "id_a", "sh_a"),
+                        sh, id_col, "__sh", "id_b", "sh_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
@@ -312,6 +304,7 @@ def simhash(df: DataFrame, text_col: str, *, out: str = "simhash",
 
 
 def hamming64(a, b):
+    """Hamming distance of two 64-bit hash columns (JVM bit_count)."""
     return F.bit_count((F.col(a) if isinstance(a, str) else a).bitwiseXOR(
         F.col(b) if isinstance(b, str) else b))
 
@@ -321,9 +314,11 @@ def simhash_dup_pairs(
     seed: int = 11, hash_method: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance <= max_hamming.
-    Banding: split the 64-bit hash into (max_hamming+1) 16-bit blocks —
-    any pair within distance max_hamming shares at least one exact block
-    (pigeonhole), so candidates = per-block equi-join, never a cross join."""
+    Banding: split the hash into (max_hamming+1) equal blocks — any pair
+    within distance max_hamming shares at least one exact block
+    (pigeonhole), so candidates = per-block equi-join, never a cross join.
+    Each block's key is ``block << width | bits`` (collision-free across
+    blocks); a single block keys on the whole hash."""
     nbits = 32 if hash_method == "poly31" else 64
     blocks = max_hamming + 1
     width = nbits // blocks
@@ -337,29 +332,55 @@ def simhash_dup_pairs(
     # token-less docs carry a NULL simhash (see simhash) — they cannot be
     # near-duplicates of anything and must not enter the banding
     sh = sh.where(F.col("simhash").isNotNull())
-    keyed = sh.select(
-        id_col, "simhash",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("blk"),
-                F.shiftright("simhash", i * width)
-                 .bitwiseAND(F.lit((1 << width) - 1)).alias("key"),
-            ) for i in range(blocks)
-        ])).alias("bk"),
-    ).select(id_col, "simhash", "bk.blk", "bk.key")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = a.join(
-        b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.key") == F.col("b.key"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"),
-    ).dropDuplicates(["id_a", "id_b"])
+    keys = ["simhash"] if blocks == 1 else [
+        f"{i << width}L + (shiftright(simhash, {i * width})"
+        f" & {(1 << width) - 1}L)" for i in range(blocks)]
+    # the 8-byte hash rides through the join: it is the whole verify payload
+    cand = band_pairs(band_keys(sh, keys, id_col, "simhash"), id_col,
+                      carry=["simhash"])
     return (
-        cand.withColumn("hamming", hamming64("sh_a", "sh_b"))
+        cand.withColumn("hamming", hamming64("simhash_a", "simhash_b"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
+
+
+def band_keys(df: DataFrame, keys: list[str], *cols) -> DataFrame:
+    """``cols`` of every row once per band key, as ``__band``: one
+    projection ``explode(array(k_0 ... k_{B-1}))`` of SQL-text ``long``
+    keys, computed in one scan of ``df``. A key must be collision-free
+    across bands unless the caller's verify step rejects the extra
+    candidates a collision adds."""
+    return df.select(
+        *cols, F.expr(f"explode(array({', '.join(keys)})) AS __band"))
+
+
+def band_pairs(a: DataFrame, id_col: str, b: DataFrame | None = None, *,
+               names=("id_a", "id_b"), carry=()) -> DataFrame:
+    """Distinct ``names`` pairs of rows sharing a ``__band`` key, both
+    sides keyed by :func:`band_keys`: an equi-join on the 8-byte key that
+    carries ids (and the ``carry`` columns, as ``<col>_a`` / ``<col>_b``)
+    only, then one ``dropDuplicates`` of the pair — a pair sharing several
+    bands is one candidate. The self-join form (``b`` None) keeps
+    ``id_a < id_b``; a probe join keeps ``id_a != id_b``. Shuffle =
+    |rows| x bands narrow keys, never |rows|^2 payloads."""
+    x, y = a.alias("a"), (a if b is None else b).alias("b")
+    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    cond = (F.col("a.__band") == F.col("b.__band")) & (
+        ia < ib if b is None else ia != ib)
+    return x.join(y, cond).select(
+        ia.alias(names[0]), ib.alias(names[1]),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    ).dropDuplicates(list(names))
+
+
+def with_payload(pairs: DataFrame, df: DataFrame, id_col: str, col: str,
+                 side: str, out: str) -> DataFrame:
+    """``pairs`` with ``df``'s ``col`` of the row whose ``id_col`` equals
+    the pair's ``side`` id, as ``out`` — the verify payload, attached to
+    candidate ids only (``df`` holds one row per id)."""
+    return pairs.join(
+        df.select(F.col(id_col).alias(side), F.col(col).alias(out)), side)
 
 
 def jaccard_dup_pairs(

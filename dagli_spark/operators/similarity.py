@@ -10,6 +10,11 @@
 - :func:`embedding_dup_pairs` — near-duplicate pairs by cosine >= threshold
   via the same LSH bucketing.
 
+The LSH tables band through dedup's one banding path (band_keys /
+band_pairs / with_payload): each table's bucket is one ``long`` key of a
+single projection, the bucket join carries ids only, and vectors are
+attached to candidate ids alone.
+
 Reference analogue: NearestVector (argmin distance vs a fixed candidate
 list, /root/reference/common/src/main/java/com/linkedin/dagli/vector/NearestVector.java:14-22)
 is exactly the broadcast-probe pattern of knn_bruteforce.
@@ -17,15 +22,14 @@ is exactly the broadcast-probe pattern of knn_bruteforce.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dagli_spark.functions.vector import cosine, dot, norm
+from dagli_spark.functions.vector import cosine
+from dagli_spark.operators.dedup import band_keys, band_pairs, with_payload
 
 
 def knn_bruteforce(
@@ -46,12 +50,19 @@ def knn_bruteforce(
     joined = c.crossJoin(F.broadcast(p))
     if exclude_self:
         joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.withColumn("cosine", cosine("__qv", "__cv"))
+    return _cosine_top_k(joined, k)
+
+
+def _cosine_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id) candidates of each query by
+    the exact cosine of ``__qv`` and ``__cv``; ties rank the lower
+    neighbor id first. The top-k of every kNN path."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("cosine", cosine("__qv", "__cv"))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
@@ -60,8 +71,6 @@ def knn_bruteforce(
 def _hyperplanes(dim: int, num_planes: int, seed: int):
     """Deterministic pseudo-random hyperplanes from a seeded integer hash
     (partition-count invariant; no numpy RNG state)."""
-    import numpy as np
-
     # splitmix64-style generator, pure function of (seed, plane, coord)
     off = (seed * 0x9E3779B97F4A7C15) % (1 << 64)  # wraparound intended
     idx = np.arange(num_planes * dim, dtype=np.uint64) + np.uint64(off)
@@ -73,44 +82,40 @@ def _hyperplanes(dim: int, num_planes: int, seed: int):
     return (u.reshape(num_planes, dim) * 2.0 - 1.0)
 
 
+def _bucket_sql(vec_col: str, planes) -> str:
+    """Sign-pattern bucket of ``vec_col`` over ``planes`` as one SQL text:
+    bit p is set when the vector's dot product with plane p, summed from
+    ``0D`` in index order, is >= 0. A null or short vector (a null dot)
+    buckets to 0 on that plane. Coordinates are ``D`` literals: a plain
+    decimal literal is a DECIMAL in Spark SQL."""
+    bits = []
+    for p_i, plane in enumerate(planes):
+        coords = ", ".join(repr(float(x)) + "D" for x in plane)
+        dot = (f"aggregate(zip_with(`{vec_col}`, array({coords}), "
+               f"(a, b) -> CAST(a AS DOUBLE) * b), 0D, (acc, x) -> acc + x)")
+        bits.append(f"CASE WHEN {dot} >= 0 THEN {1 << p_i} ELSE 0 END")
+    return " | ".join(bits)
+
+
 def lsh_bucket(df: DataFrame, vec_col: str, dim: int, *,
                num_planes: int = 8, seed: int = 13, out: str = "lsh_bucket") -> DataFrame:
-    """Sign-pattern bucket id from random hyperplanes — pure Catalyst
-    (the dot products unroll to JVM expressions over the array column)."""
-    planes = _hyperplanes(dim, num_planes, seed)
-    bucket = F.lit(0)
-    for p_i, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in plane]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        bucket = bucket.bitwiseOR(F.when(d >= 0, F.lit(1 << p_i)).otherwise(F.lit(0)))
-    return df.withColumn(out, bucket)
+    """Sign-pattern bucket id from random hyperplanes — pure Catalyst, one
+    SQL-text expression (the dot products run as JVM expressions over the
+    array column)."""
+    return df.withColumn(
+        out, F.expr(_bucket_sql(vec_col, _hyperplanes(dim, num_planes, seed))))
 
 
-def _table_bucket(t: int, num_planes: int):
-    """Composite (table, bucket) key: t shifted past the bucket's bit width
-    — collision-free by construction for any num_planes/num_tables (a
-    string-concat key is only accidentally unique)."""
-    return (F.lit(t).cast("long") * F.lit(1 << num_planes)
-            + F.col("__b")).alias("__tb")
-
-
-def _lsh_tables(df: DataFrame, vec_col: str, dim: int, cols: list, *,
-                num_planes: int, num_tables: int, seed: int) -> DataFrame:
-    """``cols`` of every row once per LSH table, keyed by the composite
-    ``__tb`` of :func:`_table_bucket`; table ``t`` hashes with its own
-    hyperplanes (``seed + 101 * t``). Rows sharing a ``__tb`` share a
-    bucket in some table."""
-    parts = [lsh_bucket(df, vec_col, dim, num_planes=num_planes,
-                        seed=seed + 101 * t, out="__b")
-             .select(*cols, _table_bucket(t, num_planes))
-             for t in range(num_tables)]
-    return reduce(DataFrame.unionByName, parts)
+def _lsh_keys(vec_col: str, dim: int, num_planes: int, num_tables: int,
+              seed: int) -> list[str]:
+    """One ``long`` band key per LSH table: ``t * 2^num_planes + bucket``,
+    table ``t`` hashing with its own hyperplanes (``seed + 101 * t``).
+    The bucket fits ``num_planes`` bits, so the key is collision-free by
+    construction — knn_lsh ranks every candidate, so a collision would
+    change its output."""
+    return [f"{t << num_planes}L + ("
+            f"{_bucket_sql(vec_col, _hyperplanes(dim, num_planes, seed + 101 * t))})"
+            for t in range(num_tables)]
 
 
 def knn_lsh(
@@ -120,30 +125,15 @@ def knn_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates = rows sharing an LSH bucket in ANY of
     ``num_tables`` independent hash tables, then exact cosine + window
-    top-k. Candidate shuffle is bounded by bucket occupancy — the IVF-style
-    scale path."""
-    def keyed(df, side):
-        return _lsh_tables(
-            df, vec_col, dim, [F.col(id_col).alias(f"{side}_id"),
-                               F.col(vec_col).alias(f"__{side}v")],
-            num_planes=num_planes, num_tables=num_tables, seed=seed)
-
-    pk = keyed(probes, "query")
-    ck = keyed(corpus, "neighbor")
-    cand = (
-        pk.join(ck, "__tb")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.withColumn("cosine", cosine("__queryv", "__neighborv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    top-k. The bucket join moves (id, key) rows only; vectors join the
+    candidate pairs afterwards — the IVF-style scale path."""
+    keys = _lsh_keys(vec_col, dim, num_planes, num_tables, seed)
+    cand = band_pairs(band_keys(probes, keys, id_col), id_col,
+                      band_keys(corpus, keys, id_col),
+                      names=("query_id", "neighbor_id"))
+    cand = with_payload(cand, probes, id_col, vec_col, "query_id", "__qv")
+    cand = with_payload(cand, corpus, id_col, vec_col, "neighbor_id", "__cv")
+    return _cosine_top_k(cand, k)
 
 
 def knn_ivf(
@@ -204,15 +194,7 @@ def knn_ivf(
     )
     cand = routed.join(assigned, "__c").where(
         F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.withColumn("cosine", cosine("__qv", "__cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_top_k(cand, k)
 
 
 def embedding_dup_pairs(
@@ -222,17 +204,10 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate (id_a < id_b, cosine >= threshold) pairs via LSH
     candidate generation + exact verification."""
-    keyed = _lsh_tables(df, vec_col, dim, [id_col, F.col(vec_col).alias("__v")],
-                        num_planes=num_planes, num_tables=num_tables,
-                        seed=seed)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = a.join(
-        b, (F.col("a.__tb") == F.col("b.__tb"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.__v").alias("va"), F.col("b.__v").alias("vb"),
-    ).dropDuplicates(["id_a", "id_b"])
+    keys = _lsh_keys(vec_col, dim, num_planes, num_tables, seed)
+    cand = band_pairs(band_keys(df, keys, id_col), id_col)
+    cand = with_payload(cand, df, id_col, vec_col, "id_a", "va")
+    cand = with_payload(cand, df, id_col, vec_col, "id_b", "vb")
     return (
         cand.withColumn("cosine", cosine("va", "vb"))
         .where(F.col("cosine") >= threshold)

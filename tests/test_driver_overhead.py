@@ -57,6 +57,26 @@ def test_dedup_build_round_trips(spark, sf01_dir, monkeypatch, op, bound,
     assert sent["c"] + sent["r"] <= bound, dict(sent)
 
 
+@pytest.mark.parametrize("op", ["knn_lsh", "embedding_dup_pairs"])
+def test_lsh_build_round_trips(spark, sf01_dir, monkeypatch, op):
+    """The LSH tables are one SQL-text key per table; the per-coordinate
+    Column build (one F.lit per hyperplane coordinate, one full scan per
+    table) made 20,397 (knn_lsh) and 13,720 (embedding_dup_pairs)."""
+    from pyspark.sql import functions as F
+
+    from dagli_spark.operators import similarity
+
+    e = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
+    build = {
+        "knn_lsh": lambda: similarity.knn_lsh(
+            e.where(F.col("vec_id") < 10), e, dim=64, k=3),
+        "embedding_dup_pairs": lambda: similarity.embedding_dup_pairs(
+            e, dim=64, threshold=0.35),
+    }[op]
+    sent = _round_trips(monkeypatch, build)
+    assert sent["c"] + sent["r"] <= 1_500, dict(sent)
+
+
 def _round_trips(monkeypatch, build) -> Counter:
     """py4j commands by kind sent while ``build()`` runs: calls ('c') and
     reflection ('r') are what a DataFrame build costs. Delete ('m')

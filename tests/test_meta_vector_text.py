@@ -371,6 +371,31 @@ def test_embedding_dup_pairs_matches_exact_above_threshold(spark):
     assert len(out) == len(got)  # dropDuplicates across tables held
 
 
+def test_lsh_bucket_null_and_short_vectors(spark):
+    """Each bucket bit is the sign of embedding . plane; a null, short or
+    empty vector has a null dot and buckets to 0 on every plane, so it
+    keeps a band key in every LSH table (a null key would drop the row
+    from the bucket join)."""
+    import numpy as np
+
+    from dagli_spark.operators.similarity import (_hyperplanes, knn_lsh,
+                                                  lsh_bucket)
+
+    v = [0.5, -1.0, 2.0, 0.25, -0.75, 1.5, -2.0, 1.0]
+    rows = [(1, v), (2, None), (3, [1.0, 2.0]), (4, [])]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    got = {r["vec_id"]: r["b"] for r in lsh_bucket(
+        df, "embedding", 8, num_planes=6, seed=5, out="b").collect()}
+    dots = _hyperplanes(8, 6, 5) @ np.array(v)
+    assert got == {1: sum(1 << p for p, d in enumerate(dots) if d >= 0),
+                   2: 0, 3: 0, 4: 0}
+    out = knn_lsh(df, df, dim=8, k=3, num_planes=6, seed=5).collect()
+    nbrs = {}
+    for r in out:
+        nbrs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    assert {3, 4} <= nbrs[2] and {2, 4} <= nbrs[3] and {2, 3} <= nbrs[4]
+
+
 def test_mapped_iterable_payload_alignment_after_shuffle(spark):
     """Row payloads must stay aligned with their mapped arrays even when
     the source is shuffle output."""

@@ -285,7 +285,9 @@ def test_minhash_no_persisted_cache(spark, sf_dir):
 # at sf0.01 (the per-bit Column and the SQL-text builds of the dedup
 # operators plan alike) — a rewrite that re-runs a lineage (the reverted
 # 16-bit-lane simhash: 4 scans, 3 explodes) or loses the banding
-# subtree's stage reuse changes them.
+# subtree's stage reuse changes them. The LSH rows explode their table
+# keys on both sides of the (broadcast) bucket join and scan the vectors
+# once more for the candidates.
 DEDUP_PLAN_NODES = {
     "simhash_pairs": dict(FileScan=2, Generate=3, Exchange=1,
                           BroadcastExchange=2, ReusedExchange=2),
@@ -295,10 +297,12 @@ DEDUP_PLAN_NODES = {
                           BroadcastExchange=3, ReusedExchange=6),
     "minhash_portable": dict(FileScan=2, Generate=5, Exchange=3,
                              BroadcastExchange=3, ReusedExchange=6),
-    "embedding_dedup": dict(FileScan=8, Generate=0, Exchange=1,
-                            BroadcastExchange=1, ReusedExchange=0),
-    "knn_lsh": dict(FileScan=8, Generate=0, Exchange=2,
-                    BroadcastExchange=1, ReusedExchange=0),
+    "embedding_dedup": dict(FileScan=3, Generate=2, Exchange=1,
+                            BroadcastExchange=2, ReusedExchange=1),
+    "knn_lsh": dict(FileScan=4, Generate=2, Exchange=2,
+                    BroadcastExchange=3, ReusedExchange=0),
+    "knn_bruteforce": dict(FileScan=2, Generate=0, Exchange=1,
+                           BroadcastExchange=1, ReusedExchange=0),
 }
 
 
@@ -322,6 +326,41 @@ def test_dedup_final_plan_shape(spark, sf01_dir, name):
     df = entrymod.queries()[name](spark, sf01_dir)
     want = DEDUP_PLAN_NODES[name]
     assert _final_plan_nodes(final_adaptive_plan(df), want) == want
+
+
+def _band_exchange_columns(df) -> list:
+    """Output types of every exchange (shuffle or broadcast) that moves a
+    ``__band`` key in ``df``'s AQE-final plan."""
+    df.collect()
+    stack, found = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        out = node.output()
+        names = [out.apply(i).name() for i in range(out.size())]
+        if kind.endswith("ExchangeExec") and "__band" in names:
+            found.append(sorted(out.apply(i).dataType().simpleString()
+                                for i in range(out.size())))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.mark.parametrize("name", ["embedding_dedup", "knn_lsh"])
+def test_lsh_band_exchange_carries_ids_only(spark, sf01_dir, name):
+    """The LSH bucket join moves (id, long key) rows: the vectors join the
+    candidate pairs afterwards, never the band shuffle."""
+    import __spark_entry__ as entrymod
+
+    found = _band_exchange_columns(entrymod.queries()[name](spark, sf01_dir))
+    # vec_id and __band, both bigint
+    assert found and all(cols == ["bigint", "bigint"] for cols in found), found
 
 
 # The forced hot-entity window path on the smoke tier (every fixture hot

@@ -312,3 +312,28 @@ def test_simhash_packed_matches_signed_sums(spark, hash_method):
     # reference agg has no row for the token-less doc; simhash leaves NULL
     assert packed.pop("empty") is None
     assert packed == ref
+
+
+@pytest.mark.parametrize("hash_method", ["xxhash64", "poly31"])
+def test_simhash_max_hamming_zero_pairs_equal_hashes(spark, hash_method):
+    """max_hamming=0 is one block the width of the hash: the key is the
+    whole hash (a 64-bit block mask overflows a long literal), and the
+    pairs are exactly the equal-simhash pairs."""
+    from dagli_spark.operators.dedup import simhash, simhash_dup_pairs
+
+    df = _simhash_corpus(spark)
+    # reordered token multisets hash alike
+    perm = df.where(F.col("doc_id").isin("d01", "d02", "d03")).select(
+        F.concat(F.lit("p"), "doc_id").alias("doc_id"),
+        F.array_join(F.reverse(F.split("text", " ")), " ").alias("text"))
+    df = df.unionByName(perm)
+    sims = [(r["doc_id"], r["simhash"])
+            for r in simhash(df, "text", id_col="doc_id",
+                             hash_method=hash_method).collect()
+            if r["simhash"] is not None]
+    want = {(a, b) for a, ha in sims for b, hb in sims if a < b and ha == hb}
+    got = simhash_dup_pairs(df, "text", "doc_id", max_hamming=0,
+                            hash_method=hash_method).collect()
+    assert {(r["id_a"], r["id_b"]) for r in got} == want
+    assert len(want) >= 3 and len(got) == len(want)
+    assert {r["hamming"] for r in got} == {0}
