@@ -211,8 +211,8 @@ def append_binary_features(
 ) -> DataFrame:
     """Shared mapInPandas scaffold for binary-column featurizers (image /
     audio / video): Arrow-batched, appends ``fields``, optionally consumes
-    the payload inside the UDF (never echo fat columns back — the double
-    Arrow crossing costs ~10x the feature math). ``batch_fn(series) ->
+    the payload inside the UDF (never echo fat columns back: each payload
+    would cross the Arrow boundary twice). ``batch_fn(series) ->
     list[tuple]`` returns one feature tuple (or all-None) per row."""
     keep = [f for f in df.schema.fields
             if not (drop_bytes and f.name == bytes_col)]
@@ -238,9 +238,15 @@ def with_decode_features(df: DataFrame, bytes_col: str = "bytes",
     mapInPandas iterator-of-batches: per-task constants are initialized
     once; each Arrow batch is processed as a unit. With ``drop_bytes``
     (default) the binary payload is consumed inside the UDF and NOT echoed
-    back — otherwise every image crosses the Arrow boundary twice, and the
-    JVM->Python->JVM round trip of the fat column costs ~10x the actual
-    decode at scale."""
+    back, so every image crosses the Arrow boundary once.
+
+    The pandas round trip is not where the stage's time goes at the
+    benchmark's size (1,500 images, local[4], median of 5 passes): a
+    JVM-only scan of the payload takes 0.35 s, a no-op mapInPandas over it
+    0.34-0.36 s, this kernel 0.43-0.44 s and the same kernel behind
+    mapInArrow 0.35-0.39 s. Those figures need the workers started through
+    :mod:`dagli_spark.pyworker`; with Spark's own daemon the same stages
+    took about 0.3 s longer (per-task set-up)."""
     return append_binary_features(df, bytes_col, DECODE_FIELDS,
                                   _features_batch, drop_bytes=drop_bytes)
 

@@ -18,7 +18,10 @@ local[N]:
   every class before its reuse and every repeated query recompiled all of
   its classes with Janino,
 - cores and driver heap sized to the host it runs on (the CPUs this
-  process may run on, half of MemAvailable), not to a fixed cluster node.
+  process may run on, half of MemAvailable), not to a fixed cluster node,
+- on a local master, Python workers started through
+  :mod:`dagli_spark.pyworker`, so a task does not re-read every zip and
+  jar directory on the worker path before it runs.
 """
 
 from __future__ import annotations
@@ -40,6 +43,9 @@ ARROW_BATCH_ROWS = 5000
 # (1,074 compilations per pass over the 82 queries); with 2,048 a second
 # pass compiles none. A mean class is 3.3 KB of bytecode.
 CODEGEN_CACHE_ENTRIES = 2048
+
+# Python worker daemon of local-master sessions (see get_spark)
+PYWORKER_MODULE = "dagli_spark.pyworker"
 
 # local[N] heap ceiling, reached at 96 GB available
 _MAX_HEAP_GB = 48
@@ -73,6 +79,12 @@ def master_cores(master: str) -> int:
         return int(n)
     except ValueError:
         return default_cores()
+
+
+def is_local_master(master: str) -> bool:
+    """True for ``local`` and ``local[...]``: every task runs in the
+    driver's JVM, on the driver's file system and Python path."""
+    return master == "local" or master.startswith("local[")
 
 
 def mem_available_bytes() -> int | None:
@@ -183,6 +195,15 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true",
     }
+    if is_local_master(master):
+        # Start Python workers through dagli_spark.pyworker, whose daemon
+        # keeps every task from re-reading the central directory of each
+        # zip and jar on the worker path (importlib.invalidate_caches in
+        # pyspark's per-task set-up; lazy since CPython 3.13, where the
+        # module only delegates to pyspark.daemon). Local masters only: a
+        # cluster executor sees --py-files after its daemon has started,
+        # so it could not import this module and keeps Spark's daemon.
+        conf["spark.python.daemon.module"] = PYWORKER_MODULE
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
